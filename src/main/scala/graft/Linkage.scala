@@ -360,15 +360,8 @@ object Linkage {
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    // content keys: changed params (or dataset-assignment expression)
-    // must not silently resume a stale snapshot. The encode stage keys
-    // on only what encoding depends on (clk, blocking, dsetIdExpr) —
-    // a threshold/k change must NOT discard the expensive encode
-    // snapshot, just the candidates one.
-    val ck = params.toString + "/" + dsetIdExpr.toString
-    val ckEncode = params.clk.toString + "/" + params.blocking.toString +
-      "/" + dsetIdExpr.toString
-    graft.io.Snapshots.resumeOrCompute(spark, params.checkpointDir, "candidates", ck) {
+    graft.io.Snapshots.resumeOrCompute(spark, params.checkpointDir, "candidates",
+        candidatesKey(params, dsetIdExpr)) {
       // The blocking stage scans the exploded records three times
       // (hot-key census, active-key build side, salted kernel feed).
       // With a checkpoint dir the encode stage is snapshotted so every
@@ -376,13 +369,25 @@ object Linkage {
       // (tests/small runs) the re-encode is accepted — measured cheaper
       // than caching (see candidatePairsFromEncoded).
       val encoded = graft.io.Snapshots
-        .resumeOrCompute(spark, params.checkpointDir, "encoded", ckEncode) {
+        .resumeOrCompute(spark, params.checkpointDir, "encoded", encodeKey(params, dsetIdExpr)) {
           encode(pages, params, dsetIdExpr).toDF()
         }
         .as[EncodedRecord]
       candidatePairsFromEncoded(encoded, params, tap, comparisons)
     }
   }
+
+  /** Snapshot content keys of [[candidatePairs]]' two stages: changed
+    * params (or dataset-assignment expression) must not silently resume
+    * a stale snapshot. The encode stage keys on only what encoding
+    * depends on (clk, blocking, dsetIdExpr) — a threshold/k change must
+    * NOT discard the expensive encode snapshot, just the candidates one. */
+  private[graft] def candidatesKey(params: LinkageParams,
+      dsetIdExpr: org.apache.spark.sql.Column): String =
+    params.toString + "/" + dsetIdExpr.toString
+  private[graft] def encodeKey(params: LinkageParams,
+      dsetIdExpr: org.apache.spark.sql.Column): String =
+    params.clk.toString + "/" + params.blocking.toString + "/" + dsetIdExpr.toString
 
   /** The scoring tail from already-encoded records: explode + salt →
     * kernel → per-block top-k restoration when salting split a block →

@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   * `--allow-same-dataset`).
   *
   * `--checkpoint <dir>` makes every stage resumable from Parquet
-  * snapshots with per-partition lineage manifests
+  * snapshots with per-file lineage manifests
   * ([[graft.io.Snapshots]]); a killed run re-submitted with the same
   * args resumes after the last completed stage. Snapshots live under a
   * per-input subdirectory (hash of the --input/--format/--dset-col
@@ -237,7 +237,8 @@ object RunPipeline {
       if (ds.rdd.getNumPartitions < minParts) ds.repartition(2 * minParts) else ds
 
     // ---- candidate generation ------------------------------------
-    val (pairs0, records, pagesWithDset, encCache) = c.format match {
+    // candidatesKey: content key of the candidates snapshot stage
+    val (pairs0, records, pagesWithDset, encCache, candidatesKey) = c.format match {
       case "pages" =>
         val withDset0 = c.dsetCol match {
           case Some(dc) =>
@@ -262,8 +263,15 @@ object RunPipeline {
         val pruned = withDset0.select(col("url"), col("text"), col("graft_dset"))
         val pairs = Linkage.candidatePairs(rebalanced(pruned), params,
           col("graft_dset"), comparisons = Some(comparisons))
-        (pairs, pruned.count(), Some(pruned),
-          None: Option[DataFrame])
+        // checkpointed: encode emits one row per input page, so the
+        // encode snapshot's manifest holds the records count
+        val records = ckptEff match {
+          case Some(d) => graft.io.Snapshots.rowCount(graft.io.Snapshots.stageDir(d,
+            "encoded", Linkage.encodeKey(params, col("graft_dset"))), spark)
+          case None => pruned.count()
+        }
+        (pairs, records, Some(pruned), None: Option[DataFrame],
+          Linkage.candidatesKey(params, col("graft_dset")))
       case _ =>
         val read: String => DataFrame =
           if (c.format == "clk-json") graft.io.ClkJsonSource.readJson(spark, _)
@@ -280,12 +288,13 @@ object RunPipeline {
         val records = enc.count()
         // same snapshot stage the pages path gets inside
         // Linkage.candidatePairs: a killed CLK run resumes here too
+        val key = params.toString + "/clk"
         val pairs = graft.io.Snapshots.resumeOrCompute(spark, ckptEff,
-            "candidates", params.toString + "/clk") {
+            "candidates", key) {
           Linkage.candidatePairsFromEncoded(enc, params,
             comparisons = Some(comparisons))
         }
-        (pairs, records, None, Some(enc))
+        (pairs, records, None, Some(enc), key)
     }
     // one materialization serves the pair count, the optional pairs
     // write and the solver (snapshot-backed when checkpointing)
@@ -295,7 +304,13 @@ object RunPipeline {
     // cached, so a failed submit in a long-lived session leaks nothing
     var clustersRef: Option[DataFrame] = None
     try {
-    val nPairs = pairs.count()
+    // checkpointed: the candidates snapshot's manifest; otherwise the
+    // count is the action that materializes the pairs cache
+    val nPairs = ckptEff match {
+      case Some(d) => graft.io.Snapshots.rowCount(
+        graft.io.Snapshots.stageDir(d, "candidates", candidatesKey), spark)
+      case None => pairs.count()
+    }
     encCache.foreach(_.unpersist()) // scoring materialized: release early
     val pairsSec = lap()
 
@@ -334,19 +349,25 @@ object RunPipeline {
           .select(col("graft_dset").as("dsetId"),
             Linkage.recIdCol(col("url")).as("recId"), col("url"))
           .dropDuplicates("dsetId", "recId")
-        clusters.join(broadcastIfSmall(ident), Seq("dsetId", "recId"), "left")
+        // a plain left join: the identity map is small next to the
+        // corpus but unbounded, so AQE picks broadcast or shuffle
+        clusters.join(ident, Seq("dsetId", "recId"), "left")
       }
-    // one job serves both result metrics (count + distinct clusters)
-    val metricsRow = clusters
-      .agg(count(lit(1)).as("n"), countDistinct(col("clusterId")).as("c"))
-      .head()
-    val clusteredRecords = metricsRow.getLong(0)
-    val nClusters = metricsRow.getLong(1)
     val solveSec = lap()
 
     // ---- write ---------------------------------------------------
     c.pairsOut.foreach(d => pairs.write.mode("overwrite").parquet(d))
-    withUrls.write.mode("overwrite").parquet(c.out)
+    // both result metrics are observed on the output write itself.
+    // Every solver labels a cluster with one member's node id, so the
+    // clusters are the rows that carry their own node id
+    val written = org.apache.spark.sql.Observation("graft.output")
+    withUrls
+      .observe(written, count(lit(1)).as("rows"),
+        count(when(graft.solve.ConnectedComponents.Encoding.nodeIdCol(
+          col("dsetId"), col("recId")) === col("clusterId"), 1)).as("clusters"))
+      .write.mode("overwrite").parquet(c.out)
+    val clusteredRecords = written.get("rows").asInstanceOf[Long]
+    val nClusters = written.get("clusters").asInstanceOf[Long]
     // the output now owns the result: drop the solver round snapshots
     // (they live in per-run UUID subdirs a re-submit never reuses —
     // without this every submit leaks one matched-set snapshot; the
@@ -372,13 +393,6 @@ object RunPipeline {
       }
     }
   }
-
-  /** Identity-map joins like the url attachment are usually tiny next
-    * to the corpus (clusters only), but nothing bounds them — leave the
-    * decision to AQE rather than forcing a broadcast that OOMs on a
-    * pathological run. Kept as a named seam so the policy is explicit
-    * and testable. */
-  private def broadcastIfSmall(df: DataFrame): DataFrame = df
 
   private def writeSummary(spark: SparkSession, outDir: String, s: Summary): Unit = {
     val p = new org.apache.hadoop.fs.Path(outDir, "_SUMMARY.json")

@@ -2,7 +2,8 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.charset.StandardCharsets
 
 /** Stage-boundary snapshot checkpoints with a lineage manifest.
@@ -12,7 +13,7 @@ import java.nio.charset.StandardCharsets
   * runtime jar exists in this sandbox (verified: /opt/spark/jars has
   * Parquet/Avro only — SURVEY §7.1), so snapshots are Parquet dirs plus
   * a JSON manifest recording: snapshot id (content-derived), row count,
-  * per-partition row counts (lineage), and schema. `resumeOrCompute`
+  * per-file row counts (lineage), and schema. `resumeOrCompute`
   * gives each pipeline stage restart-into-the-middle semantics — the
   * Spark-batch analogue of the reference's dump/merge shard files
   * (`/root/reference/anonlink/serialization.py:182-338`).
@@ -44,28 +45,53 @@ object Snapshots {
 
   /** Write `df` as a snapshot under `dir` and return a re-read of it
     * (so downstream stages read from stable storage, truncating
-    * lineage like `Dataset.checkpoint`). */
+    * lineage like `Dataset.checkpoint`).
+    *
+    * The write is the only Spark job: the manifest's per-file row
+    * counts come from the Parquet footers of the files just committed
+    * (driver-side metadata reads, no data scan), and the re-read takes
+    * the schema that was just written instead of inferring it. */
   def write(df: DataFrame, dir: String): DataFrame = {
     val spark = df.sparkSession
     df.write.mode("overwrite").parquet(dir)
-    val back = spark.read.parquet(dir)
-    // per-partition lineage: rows per output file partition
-    val partCounts = back.groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val rowCount = partCounts.map(_._2).sum
+    val (fs, p) = fsFor(dir, spark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // per-file lineage: rows in each committed data file (the same
+    // hidden-file rule Spark's file index applies to `_`/`.` names)
+    val fileRows = fs.listStatus(p)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try st.getPath.getName -> reader.getRecordCount finally reader.close()
+      }
+    val rowCount = fileRows.map(_._2).sum
     val snapshotId = java.lang.Long.toHexString(
       graft.core.Hashing.str(dir + ":" + rowCount + ":" + df.schema.treeString, 0x5aa9L))
-    val parts = partCounts.map { case (p, c) => s"""{"partition":$p,"rows":$c}""" }
+    val parts = fileRows.map { case (f, c) => s"""{"file":"$f","rows":$c}""" }
       .mkString("[", ",", "]")
     val schemaJson = df.schema.fields.map(f =>
       s""""${f.name}":"${f.dataType.simpleString}"""").mkString("{", ",", "}")
     val manifest =
       s"""{"snapshot_id":"$snapshotId","row_count":$rowCount,"partitions":$parts,"schema":$schemaJson}"""
-    val (fs, p) = fsFor(dir, spark)
     val out = fs.create(new Path(p, "_MANIFEST.json"), true)
     try out.write(manifest.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    back
+    spark.read.schema(df.schema).parquet(dir)
+  }
+
+  /** The `row_count` of the snapshot under `dir`, read from its
+    * manifest; fails loudly when `dir` holds no complete snapshot. */
+  def rowCount(dir: String, spark: SparkSession = SparkSession.active): Long = {
+    def fail(why: String): Nothing = throw new IllegalStateException(
+      s"no row count for the snapshot under $dir: $why — rerun with a fresh checkpoint dir")
+    if (!exists(dir, spark)) fail("no complete snapshot (manifest or _SUCCESS missing)")
+    val (fs, p) = fsFor(dir, spark)
+    val in = fs.open(new Path(p, "_MANIFEST.json"))
+    val manifest = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    """"row_count":(\d+)""".r.findFirstMatchIn(manifest)
+      .fold(fail("the manifest has no row_count"))(_.group(1).toLong)
   }
 
   /** Round-boundary lineage truncation for ITERATIVE solvers (CC,

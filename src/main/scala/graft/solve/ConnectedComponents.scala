@@ -173,19 +173,41 @@ object ConnectedComponents {
 
   /** Convenience: cluster candidate pairs (dset0,dset1,rec0,rec1) into
     * (dsetId, recId, clusterId). Node ids are packed via a mixing of
-    * (dsetId, recId); the caller keeps a vertex table for the reverse
-    * mapping.
+    * (dsetId, recId) ([[Encoding.nodeIdCol]]); clusterId is the minimum
+    * node id of the cluster, so it is always one member's node id.
+    *
+    * Small graphs (at most 100 000 pairs, [[run]]'s default
+    * driver-finish threshold) are labelled on the driver: the gate collects the pair
+    * endpoints themselves in ONE limited action, labels them with a
+    * union-find, and returns the table built on the driver — no vertex
+    * `distinct` and no join of driver labels back through Spark. The
+    * result is row-identical to [[run]]'s distributed path joined with
+    * the vertex table: self-loop-only nodes are dropped there by the
+    * inner join and here by labelling only non-self-loop endpoints.
     *
     * Eager-and-released like the near-dup ops: the RESULT comes back
     * cached and materialized, and the internal input cache (taken only
-    * when the caller passed an unpersisted frame) is released before
-    * returning — repeated calls in one session must not accumulate
-    * pinned copies of the whole upstream scoring pipeline. Callers
-    * `unpersist()` the returned frame when done. */
+    * on the distributed path, when the caller passed an unpersisted
+    * frame) is released before returning — repeated calls in one
+    * session must not accumulate pinned copies of the whole upstream
+    * scoring pipeline. Callers `unpersist()` the returned frame when
+    * done. */
   def clusterPairs(pairs0: DataFrame, maxIterations: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs0.sparkSession
     import spark.implicits._
+    val gateLimit = DriverFinishPairs.toInt + 1
+    val ends = pairs0
+      .select(col("dset0").cast("int"), col("rec0").cast("long"),
+        col("dset1").cast("int"), col("rec1").cast("long"))
+      .as[(Int, Long, Int, Long)]
+      .limit(gateLimit).collect()
+    if (ends.length < gateLimit) {
+      val out = labelOnDriver(ends).toDF("dsetId", "recId", "clusterId").cache()
+      // materialize with one job: count() would add an aggregate exchange
+      out.foreach((_: org.apache.spark.sql.Row) => ())
+      return out
+    }
     // cache: the pair stream is scanned by BOTH vertex projections, the
     // edge projection, and CC's initial distinct+count — without this a
     // lazily-derived input (the whole scoring pipeline) recomputes 3-4×.
@@ -212,6 +234,38 @@ object ConnectedComponents {
     } finally { if (ownCache) pairs.unpersist(blocking = true) }
   }
 
+  /** [[clusterPairs]]' pair-count gate: [[run]]'s default edge threshold. */
+  private val DriverFinishPairs = 100000L
+
+  /** The cluster rows (dsetId, recId, clusterId) of a small pair list:
+    * union-find over the non-self-loop node edges with the minimum node
+    * id as each root, then every distinct endpoint whose node lies on
+    * such an edge. */
+  private def labelOnDriver(ends: Array[(Int, Long, Int, Long)]): Seq[(Int, Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    import Encoding.{nodeId => node}
+    for ((d0, r0, d1, r1) <- ends) {
+      val (a, b) = (node(d0, r0), node(d1, r1))
+      if (a != b) {
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    ends.iterator
+      .flatMap { case (d0, r0, d1, r1) => Iterator((d0, r0), (d1, r1)) }
+      .distinct
+      .collect { case (d, r) if parent.contains(node(d, r)) => (d, r, find(node(d, r))) }
+      .toSeq
+  }
+
   object Encoding {
     import org.apache.spark.sql.Column
     /** node id = (dsetId << 56) XOR mix of recId — dsetId is tiny
@@ -221,5 +275,7 @@ object ConnectedComponents {
       * codegen'd). */
     def nodeIdCol(dset: Column, rec: Column): Column =
       shiftleft(dset.cast("long") + 1, 56).bitwiseXOR(rec)
+    /** [[nodeIdCol]] on the driver, for solvers that label there. */
+    def nodeId(dset: Int, rec: Long): Long = ((dset.toLong + 1) << 56) ^ rec
   }
 }

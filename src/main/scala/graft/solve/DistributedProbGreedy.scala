@@ -84,7 +84,7 @@ object DistributedProbGreedy {
         Greedy.probabilisticGreedySolve(cands, mergeThreshold, deduplicated)
           .iterator.flatMap { g =>
             val cid = g.iterator
-              .map(r => ((r.dset + 1).toLong << 56) ^ r.rec).min
+              .map(r => ConnectedComponents.Encoding.nodeId(r.dset, r.rec)).min
             g.iterator.map(m => (m.dset, m.rec, cid))
           }
       }

@@ -167,4 +167,62 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       out2.unpersist(blocking = true)
     } finally mine.unpersist(blocking = true)
   }
+
+  test("clusterPairs' driver-built table == distributed CC through the " +
+      "vertex table, on random multi-dataset pair sets") {
+    val rnd = new scala.util.Random(2024)
+    for (trial <- 1 to 4) {
+      // three datasets, few records each: records recur across pairs,
+      // components span datasets, and self-loops/duplicates occur
+      val rows = (1 to 120).map { _ =>
+        (rnd.nextDouble(), rnd.nextInt(3), rnd.nextInt(3),
+          rnd.nextInt(25).toLong, rnd.nextInt(25).toLong)
+      } ++ Seq((1.0, 0, 0, 7L, 7L), (1.0, 2, 2, 99L, 99L)) // a self-loop-only node
+      val pairs = rows.toDF("sim", "dset0", "dset1", "rec0", "rec1")
+      var small: org.apache.spark.sql.DataFrame = null
+      val actions = SparkTestBase.countRootActions {
+        small = ConnectedComponents.clusterPairs(pairs)
+      }
+      assert(actions == 2, s"trial $trial: the small-graph path is one gate " +
+        s"collect + one materialization (saw $actions root actions)")
+      val nodeId0 = ConnectedComponents.Encoding.nodeIdCol($"dset0", $"rec0")
+      val nodeId1 = ConnectedComponents.Encoding.nodeIdCol($"dset1", $"rec1")
+      val vertices = pairs.select($"dset0".as("dsetId"), $"rec0".as("recId"))
+        .union(pairs.select($"dset1", $"rec1")).distinct()
+        .withColumn("node", ConnectedComponents.Encoding.nodeIdCol($"dsetId", $"recId"))
+      val comps = ConnectedComponents.run(pairs.select(nodeId0.as("src"), nodeId1.as("dst")),
+        driverFinishThreshold = 0L)
+      val distributed = vertices.join(comps, "node")
+        .select($"dsetId", $"recId", $"component".as("clusterId"))
+      def sortedRows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Int, Long, Long)].collect().toSeq.sorted
+      val got = sortedRows(small)
+      assert(got == sortedRows(distributed), s"trial $trial")
+      assert(got.nonEmpty && !got.exists(r => r._2 == 99L), s"trial $trial")
+      small.unpersist(blocking = true)
+    }
+  }
+
+  test("every solver labels a cluster with exactly one member's node id") {
+    val rnd = new scala.util.Random(77)
+    // two-party, pair-deduplicated candidates (greedy's precondition)
+    val pairs = (1 to 150)
+      .map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .distinct
+      .map { case (r0, r1) => (rnd.nextInt(1000) / 1000.0, 0, 1, r0, r1) }
+      .toDF("sim", "dset0", "dset1", "rec0", "rec1")
+    val solved = Seq(
+      "components" -> ConnectedComponents.clusterPairs(pairs),
+      "greedy" -> graft.solve.DistributedGreedy.clusters2Party(pairs),
+      "probabilistic" -> graft.solve.DistributedProbGreedy.clusters(pairs, 0.5))
+    for ((name, clusters) <- solved) {
+      val rows = clusters.as[(Int, Long, Long)].collect().toSeq
+      assert(rows.nonEmpty, name)
+      for ((cid, members) <- rows.groupBy(_._3))
+        assert(members.count { case (d, r, _) =>
+          ConnectedComponents.Encoding.nodeId(d, r) == cid } == 1,
+          s"$name: cluster $cid is not labelled by exactly one member's node id")
+    }
+    solved.foreach(_._2.unpersist())
+  }
 }

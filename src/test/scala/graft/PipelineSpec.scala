@@ -241,4 +241,33 @@ class PipelineSpec extends AnyFunSuite {
       pagesDf, changed.copy(checkpointDir = None), dsetExpr))
     assert(third == expected && third != first)
   }
+
+  test("snapshot manifests are exact: row_count and per-file rows equal a " +
+      "re-scan, and the returned schema equals an inferred read") {
+    val base = java.nio.file.Files.createTempDirectory("graft-manifest").toString
+    val params = LinkageParams(blocking = MinhashBlocking())
+    val encoded = Linkage.encode(pagesDf, params, dsetExpr).toDF()
+    for ((name, df) <- Seq("encoded" -> encoded.repartition(3),
+        "empty" -> encoded.limit(0))) {
+      val dir = s"$base/$name"
+      val back = graft.io.Snapshots.write(df, dir)
+      val manifest = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+        new java.io.File(s"$dir/_MANIFEST.json"))
+      val rescan = spark.read.parquet(dir)
+      assert(manifest.get("row_count").asLong == rescan.count(), name)
+      assert(graft.io.Snapshots.rowCount(dir) == rescan.count(), name)
+      val perFile = (0 until manifest.get("partitions").size).map { i =>
+        val e = manifest.get("partitions").get(i)
+        e.get("file").asText -> e.get("rows").asLong
+      }
+      val dataFiles = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(f => !f.startsWith("_") && !f.startsWith(".")).sorted.toSeq
+      assert(perFile.map(_._1) == dataFiles, name)
+      for ((f, rows) <- perFile)
+        assert(spark.read.parquet(s"$dir/$f").count() == rows, s"$name/$f")
+      assert(perFile.map(_._2).sum == manifest.get("row_count").asLong, name)
+      assert(back.schema == rescan.schema, name)
+      assert(back.count() == rescan.count(), name)
+    }
+  }
 }

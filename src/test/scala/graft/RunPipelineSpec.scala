@@ -333,4 +333,59 @@ class RunPipelineSpec extends AnyFunSuite {
       .filter(p => p.getFileName.toString == "greedy")
     assert(leaked.isEmpty, s"leaked solver snapshot dirs: $leaked")
   }
+
+  test("checkpointed summaries equal explicit counts for every solver, " +
+      "and a resumed run reports the fresh run's numbers") {
+    val (base, a, b) = corpusDirs
+    val inputRecords = spark.read.parquet(a).count() + spark.read.parquet(b).count()
+    for (solver <- Seq("components", "greedy", "probabilistic")) {
+      val out = s"$base/out_counts_$solver"; val pairsOut = s"$base/pairs_counts_$solver"
+      val cfg = RunPipeline.Config(inputs = Seq(a, b), out = out,
+        pairsOut = Some(pairsOut), solver = solver,
+        checkpointDir = Some(s"$base/ckpt_counts_$solver"))
+      def counted(s: RunPipeline.Summary): Seq[Long] = {
+        val got = spark.read.parquet(out)
+        assert(s.records == inputRecords, solver)
+        assert(s.pairs == spark.read.parquet(pairsOut).count(), solver)
+        assert(s.clusteredRecords == got.count(), solver)
+        assert(s.clusters == got.select("clusterId").distinct().count(), solver)
+        Seq(s.records, s.pairs, s.clusteredRecords, s.clusters)
+      }
+      val fresh = RunPipeline.run(spark, cfg)
+      assert(fresh.comparisons > 0L && fresh.clusters > 0L, solver)
+      val freshCounts = counted(fresh)
+      val resumed = RunPipeline.run(spark, cfg)
+      assert(resumed.comparisons == 0L, s"$solver: the resumed run scored again")
+      assert(counted(resumed) == freshCounts, solver)
+    }
+  }
+
+  test("a run that finds no candidate pairs reports zero counts, " +
+      "checkpointed or not") {
+    val base = corpusDirs._1
+    for ((d, words) <- Seq(0 -> "alpha beta gamma delta", 1 -> "kappa lambda sigma omega"))
+      Seq((s"http://x$d/1", words), (s"http://x$d/2", words.reverse))
+        .toDF("url", "text").write.mode("overwrite").parquet(s"$base/nopairs_$d")
+    for (ckpt <- Seq(None, Some(s"$base/ckpt_nopairs"))) {
+      val s = RunPipeline.run(spark, RunPipeline.Config(
+        inputs = Seq(s"$base/nopairs_0", s"$base/nopairs_1"),
+        out = s"$base/out_nopairs", checkpointDir = ckpt))
+      assert((s.records, s.pairs, s.clusteredRecords, s.clusters) == ((4L, 0L, 0L, 0L)),
+        s"checkpoint $ckpt")
+    }
+  }
+
+  test("a checkpointed run's Spark actions are pinned: counts come from " +
+      "the writes, not from extra passes") {
+    val base = corpusDirs._1
+    val cfg = RunPipeline.Config(inputs = Seq(s"$base/all"), dsetCol = Some("dsetId"),
+      out = s"$base/out_actions", checkpointDir = Some(s"$base/ckpt_actions"))
+    val n = SparkTestBase.countRootActions { RunPipeline.run(spark, cfg) }
+    // the input rebalance's partition-count probe (an execution with no
+    // job), encode snapshot write, hot-key census, candidates snapshot
+    // write, the clustering gate collect, the driver-built table's
+    // materialization, clusters snapshot write, output write
+    assert(n == 8, s"a checkpointed run executed $n root actions (pinned: 8) — " +
+      "a count-only pass over a stage that was just written came back")
+  }
 }
