@@ -337,7 +337,7 @@ object SparkEntry {
       val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
       // direct capped join — measured faster than PPJoin prefix
       // filtering at this threshold/corpus (see the measurement note
-      // in Dedup.ngramJaccardPairs, which offers prefixFilter opt-in)
+      // in CHANGES.md)
       val inter = grams.as("a").join(grams.as("b"), "g")
         .where(col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("id0"), col("b.doc_id").as("id1"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.block.{Blocking, MinhashParams}
 import graft.core.Hashing
@@ -294,12 +293,14 @@ object Dedup {
     * stages downstream (shingling, minhash, normalization) inherit the
     * SCAN's partitioning, and a small corpus packs into 1-2 scan splits
     * (openCostInBytes file packing) — serializing those stages
-    * regardless of available cores. Same guard as RunPipeline's encode
-    * rebalance: a 100 TB scan has thousands of partitions, so this
-    * never fires at scale and large runs keep the shuffle-free
-    * scan→signature path. Call with scan-shaped inputs (the operators'
-    * documented input contract) — partition-count inspection of an
-    * exchange-bearing plan could trigger upstream work. */
+    * regardless of available cores. The partition-count guard is
+    * RunPipeline's encode rebalance; the 8 MB size gate below is this
+    * copy's alone (RunPipeline rebalances any under-partitioned scan).
+    * A 100 TB scan has thousands of partitions, so this never fires at
+    * scale and large runs keep the shuffle-free scan→signature path.
+    * Call with scan-shaped inputs (the operators' documented input
+    * contract) — partition-count inspection of an exchange-bearing
+    * plan could trigger upstream work. */
   private def rebalanced(df: DataFrame): DataFrame = {
     val minParts = df.sparkSession.sparkContext.defaultParallelism
     // size gate: only rebalance when there is enough data for the extra
@@ -546,33 +547,6 @@ object Dedup {
     * equi-join: docs → (gram, id) → candidate pairs → per-pair
     * intersection counts → Jaccard.
     *
-    * '''Prefix filtering''' (`prefixFilter = true` — PPJoin's
-    * position-less prefix principle, Xiao et al. WWW'08, OPT-IN): a
-    * pair with Jaccard ≥ t must share at least one gram among each
-    * doc's `|g| − ⌈t·|g|⌉ + 1` RAREST grams (global df ascending, gram
-    * value as tie-break — any consistent total order is correct, the
-    * rare-first order is the effective one). Only those prefix grams
-    * enter the candidate self-join, so join volume drops from
-    * Σ_g df(g)² to Σ_g pdf(g)² over rare grams; candidates are then
-    * verified with intersection counts over the FULL gram index —
-    * output is EXACTLY the unfiltered result at every threshold (the
-    * prefix theorem prunes only pairs that cannot reach t; exactness
-    * is spec-pinned across thresholds). The ⌈t·n⌉ is computed as
-    * `ceil(t·n − 1e-9)`: floating-point up-rounding could only ever
-    * SHORTEN the prefix (drop qualifying pairs), so the epsilon errs
-    * toward a longer prefix — extra candidates are verified away,
-    * never missed.
-    *
-    * Default OFF, by measurement: on corpora whose gram distribution
-    * is flat after the df-cap (the synthetic test corpora here — most
-    * grams df ≤ 2), the direct capped join is already cheap and the
-    * prefix machinery (df join + per-doc rank window + candidate
-    * distinct + full-index verify joins) measured 2–2.5× SLOWER at
-    * t = 0.3 AND t = 0.8 (20k docs, local[32]). Turn it on for
-    * Zipfian natural-language grams where many MID-frequency grams
-    * (df just under the cap) dominate Σ min(df, cap)² — the regime
-    * the prefix bound was designed for and the df-cap cannot help.
-    *
     * Grams with document frequency above `maxDf` are treated as
     * stop-grams and removed from the gram sets entirely (both the
     * index AND the set sizes), so the Jaccard stays exact over the
@@ -598,8 +572,7 @@ object Dedup {
       ngramN: Int = 3,
       threshold: Double = 0.5,
       seed: Long = 0x9a33L,
-      maxDf: Long = 100000L,
-      prefixFilter: Boolean = false): DataFrame = {
+      maxDf: Long = 100000L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // df-cap via a hash-aggregate census + broadcast anti-join — no
@@ -627,42 +600,12 @@ object Dedup {
     val grams = grams0.join(broadcast(stopGrams), Seq("gram"), "left_anti")
       .cache()
     val sizes = grams.groupBy($"id").agg(count(lit(1)).as("n"))
-    // prefix index: each doc's |g| − ⌈t·|g|⌉ + 1 globally-rarest grams
-    // (cached for the two sides of its self-join); None = full index
-    val prefix: Option[DataFrame] =
-      if (!prefixFilter) None
-      else {
-        val dfs = grams.groupBy($"gram").agg(count(lit(1)).as("df"))
-        Some(grams.join(dfs, "gram")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"id").orderBy($"df", $"gram")))
-          .join(sizes, "id")
-          .where($"rn" <= $"n" - ceil(lit(threshold) * $"n" - lit(1e-9)) + 1)
-          .select($"id", $"gram")
-          .cache())
-      }
-    val inter = prefix match {
-      case None =>
-        // direct self-join count: every gram-sharing pair gets its
-        // intersection size in one aggregation
-        grams.as("a").join(grams.as("b"), "gram")
-          .where($"a.id" < $"b.id")
-          .groupBy($"a.id".as("id0"), $"b.id".as("id1"))
-          .agg(count(lit(1)).as("inter"))
-      case Some(pfx) =>
-        // candidates share a PREFIX gram (distinct — a pair can share
-        // several); intersection sizes come from joining candidates
-        // back to the FULL gram index, so the Jaccard is exact
-        val cands = pfx.as("a").join(pfx.as("b"), "gram")
-          .where($"a.id" < $"b.id")
-          .select($"a.id".as("id0"), $"b.id".as("id1"))
-          .distinct()
-        cands
-          .join(grams.select($"id".as("id0"), $"gram"), "id0")
-          .join(grams.select($"id".as("id1"), $"gram"), Seq("id1", "gram"))
-          .groupBy($"id0", $"id1")
-          .agg(count(lit(1)).as("inter"))
-    }
+    // direct self-join count: every gram-sharing pair gets its
+    // intersection size in one aggregation
+    val inter = grams.as("a").join(grams.as("b"), "gram")
+      .where($"a.id" < $"b.id")
+      .groupBy($"a.id".as("id0"), $"b.id".as("id1"))
+      .agg(count(lit(1)).as("inter"))
     try {
       val out = inter
         .join(sizes.select($"id".as("id0"), $"n".as("n0")), "id0")
@@ -674,7 +617,7 @@ object Dedup {
       out.count()
       out
     } finally {
-      grams.unpersist(); grams0.unpersist(); prefix.foreach(_.unpersist())
+      grams.unpersist(); grams0.unpersist()
     }
   }
 

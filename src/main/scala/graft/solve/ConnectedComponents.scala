@@ -72,22 +72,8 @@ object ConnectedComponents {
     // where length <= threshold would hold on a TRUNCATED edge set and
     // label components from incomplete data)
     if (gathered.length < gateLimit) {
-      val arr = gathered
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      arr.foreach { case (s, d) =>
-        val (rs, rd) = (find(s), find(d))
-        if (rs != rd) { if (rs < rd) parent(rd) = rs else parent(rs) = rd }
-      }
-      val nodes = arr.iterator.flatMap { case (s, d) => Iterator(s, d) }.toSet
-      onRound(0, arr.length.toLong)
-      return nodes.iterator.map(nd => (nd, find(nd))).toSeq.toDF("node", "component")
+      onRound(0, gathered.length.toLong)
+      return minRootLabels(gathered.iterator).toSeq.toDF("node", "component")
     }
 
     e = ckpt(e)
@@ -203,7 +189,15 @@ object ConnectedComponents {
       .as[(Int, Long, Int, Long)]
       .limit(gateLimit).collect()
     if (ends.length < gateLimit) {
-      val out = labelOnDriver(ends).toDF("dsetId", "recId", "clusterId").cache()
+      import Encoding.{nodeId => node}
+      val labels = minRootLabels(ends.iterator.map { case (d0, r0, d1, r1) =>
+        (node(d0, r0), node(d1, r1)) })
+      // every distinct endpoint whose node lies on a non-self-loop edge
+      val out = ends.iterator
+        .flatMap { case (d0, r0, d1, r1) => Iterator((d0, r0), (d1, r1)) }
+        .distinct
+        .flatMap { case (d, r) => labels.get(node(d, r)).map((d, r, _)) }
+        .toSeq.toDF("dsetId", "recId", "clusterId").cache()
       // materialize with one job: count() would add an aggregate exchange
       out.foreach((_: org.apache.spark.sql.Row) => ())
       return out
@@ -237,33 +231,24 @@ object ConnectedComponents {
   /** [[clusterPairs]]' pair-count gate: [[run]]'s default edge threshold. */
   private val DriverFinishPairs = 100000L
 
-  /** The cluster rows (dsetId, recId, clusterId) of a small pair list:
-    * union-find over the non-self-loop node edges with the minimum node
-    * id as each root, then every distinct endpoint whose node lies on
-    * such an edge. */
-  private def labelOnDriver(ends: Array[(Int, Long, Int, Long)]): Seq[(Int, Long, Long)] = {
+  /** Sequential min-root union-find over a small edge list: maps every
+    * endpoint of a non-self-loop edge to the smallest node id in its
+    * component. The driver finish of both [[run]] and [[clusterPairs]]. */
+  private def minRootLabels(edges: Iterator[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    import Encoding.{nodeId => node}
-    for ((d0, r0, d1, r1) <- ends) {
-      val (a, b) = (node(d0, r0), node(d1, r1))
-      if (a != b) {
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
+    for ((a, b) <- edges if a != b) {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    ends.iterator
-      .flatMap { case (d0, r0, d1, r1) => Iterator((d0, r0), (d1, r1)) }
-      .distinct
-      .collect { case (d, r) if parent.contains(node(d, r)) => (d, r, find(node(d, r))) }
-      .toSeq
+    parent.keys.toArray.map(n => n -> find(n)).toMap
   }
 
   object Encoding {

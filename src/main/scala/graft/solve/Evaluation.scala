@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
 object Evaluation {
 
   /** The lazy single-action (tp, pred_pairs, truth_pairs) aggregate —
-    * split out so plan audits (`tools.PlanLab`) can explain the
-    * grouping-sets plan that [[pairwise]] collects eagerly. */
+    * split out so a plan audit can explain the grouping-sets plan that
+    * [[pairwise]] collects eagerly. */
   private[graft] def pairSums(joined: DataFrame,
       c2: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
     joined

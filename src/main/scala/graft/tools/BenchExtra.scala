@@ -19,7 +19,7 @@ import graft.SparkEntry
   *                        plans of the RETURNED frame (eager operators
   *                        return their cached result — the interesting
   *                        interior plans are dumped by the operators'
-  *                        own explain paths / PlanLab instead)
+  *                        own explain paths instead)
   */
 object BenchExtra {
 

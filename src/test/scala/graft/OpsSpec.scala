@@ -115,24 +115,27 @@ class OpsSpec extends AnyFunSuite {
 
   test("ngram jaccard pairs match a brute-force oracle") {
     val sample = docs.where($"id" <= 40).cache()
-    val got = Dedup.ngramJaccardPairs(sample, "id", "text", threshold = 0.3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // brute force on the driver
     val texts = sample.select("id", "text").collect().map(r => (r.getLong(0), r.getString(1)))
     val gramsById = texts.map { case (id, t) =>
       id -> graft.encode.ClkEncoder.wordNgramHashes(t, 3, 0x9a33L).distinct.toSet
     }.toMap
-    val want = (for {
-      (i, gi) <- gramsById.toSeq
-      (j, gj) <- gramsById.toSeq
-      if i < j
-      inter = gi.intersect(gj).size
-      union = gi.size + gj.size - inter
-      jac = if (union == 0) 1.0 else inter.toDouble / union
-      if jac >= 0.3
-    } yield ((i, j), jac)).toMap
-    assert(got.keySet == want.keySet)
-    got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-12) }
+    for (t <- Seq(0.2, 0.3, 0.4, 0.6, 0.8)) {
+      val res = Dedup.ngramJaccardPairs(sample, "id", "text", threshold = t)
+      val got = res.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      res.unpersist()
+      val want = (for {
+        (i, gi) <- gramsById.toSeq
+        (j, gj) <- gramsById.toSeq
+        if i < j
+        inter = gi.intersect(gj).size
+        union = gi.size + gj.size - inter
+        jac = if (union == 0) 1.0 else inter.toDouble / union
+        if jac >= t
+      } yield ((i, j), jac)).toMap
+      assert(got.keySet == want.keySet, s"pair set differs at t=$t")
+      got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-12) }
+    }
   }
 
   test("embedding near-dup finds planted near-identical vectors") {
@@ -560,15 +563,6 @@ class OpsSpec extends AnyFunSuite {
     assert(newIds.size == 1,
       s"exactly the returned frame's cache may survive the call; leaked RDD ids: $newIds")
     out.unpersist(blocking = true)
-    // prefix-filter variant pins the SAME contract for its extra cache
-    // (the prefix index) — nothing internal outlives the call
-    val before2 = spark.sparkContext.getPersistentRDDs.keySet
-    val out2 = Dedup.ngramJaccardPairs(sample, "id", "text", threshold = 0.3,
-      prefixFilter = true)
-    val newIds2 = spark.sparkContext.getPersistentRDDs.keySet -- before2
-    assert(newIds2.size == 1,
-      s"prefix path leaked internal caches; new RDD ids: $newIds2")
-    out2.unpersist(blocking = true)
   }
 
   test("IVF store content verification: corpus rewritten under the same dir " +
@@ -722,23 +716,6 @@ class OpsSpec extends AnyFunSuite {
     // byte-histogram features, never throw
     assert(out(2L).toSeq == ByteHistogramDecoder.decodeOne(rows(1)).features.toSeq)
     assert(out(3L).toSeq == ByteHistogramDecoder.decodeOne(rows(2)).features.toSeq)
-  }
-
-  test("ngram prefix filtering (PPJoin) is exact: identical pairs with and " +
-      "without, across thresholds") {
-    val sample = docs.where($"id" <= 40)
-    def pairs(df: org.apache.spark.sql.DataFrame) = {
-      val s = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      df.unpersist(); s
-    }
-    for (t <- Seq(0.2, 0.4, 0.6, 0.8)) {
-      val on = pairs(Dedup.ngramJaccardPairs(sample, "id", "text", threshold = t,
-        prefixFilter = true))
-      val off = pairs(Dedup.ngramJaccardPairs(sample, "id", "text", threshold = t,
-        prefixFilter = false))
-      assert(on == off, s"prefix filter changed the result at t=$t: " +
-        s"only-on=${(on -- off).take(3)} only-off=${(off -- on).take(3)}")
-    }
   }
 
   test("dedup ops tolerate NULL text (crawl convention: null == empty, like Linkage.encode)") {
