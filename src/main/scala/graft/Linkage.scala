@@ -247,12 +247,10 @@ object Linkage {
   }
 
   /** C1/C2/S2: per-(key,salt) cell, run the packed Dice kernel for
-    * every ordered dataset pair `(i0 < i1)` present in the cell —
-    * multi-party like the reference's `_block_similarities`
-    * (`candidate_generation.py:28-40`, `itertools.combinations`).
-    * `comparisons`, when given, counts Σ|A_i|·|B_j| per cell — the same
-    * "comparisons" metric the reference benchmark reports
-    * (`/root/reference/anonlink/benchmark.py:66`). */
+    * every ordered dataset pair `(i0 < i1)` present in the cell
+    * ([[scoreCells]]). `comparisons`, when given, counts Σ|A_i|·|B_j|
+    * per cell — the same "comparisons" metric the reference benchmark
+    * reports (`/root/reference/anonlink/benchmark.py:66`). */
   def scorePairs(blocked: Dataset[BlockedRow], params: LinkageParams,
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
     scorePairsWithKey(blocked, params, comparisons).drop("key")
@@ -262,10 +260,23 @@ object Linkage {
     * can be restored after salting split a block into cells. */
   def scorePairsWithKey(blocked: Dataset[BlockedRow], params: LinkageParams,
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = blocked.sparkSession
-    import spark.implicits._
     val threshold = params.threshold
     val k = params.k
+    scoreCells(blocked, DiceKernel.blockDiceTopKPacked(_, _, threshold, k, _, _), comparisons)
+  }
+
+  /** The one cell scorer behind Dice ([[scorePairsWithKey]]) and SMC
+    * ([[graft.ops.Smc.scorePairs]]), the shape of the reference's
+    * `_block_similarities` (`candidate_generation.py:28-40`): per
+    * (key, salt) cell, pack each dataset's rows once and call `kernel`
+    * on every dataset pair `d0 < d1` (`itertools.combinations`).
+    * `comparisons`, when given, counts Σ|A|·|B| over those pairs.
+    * Emits (key, sim, dset0, dset1, rec0, rec1). */
+  private[graft] def scoreCells(blocked: Dataset[BlockedRow],
+      kernel: (DiceKernel.Packed, DiceKernel.Packed, Int, Int) => Iterator[Candidate],
+      comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+    val spark = blocked.sparkSession
+    import spark.implicits._
     // relational groupBy on the (key, salt) COLUMNS, not a typed
     // groupByKey on a lambda: the planner can see the grouping key, so
     // when the upstream semi-join already hash-partitioned the stream
@@ -276,37 +287,21 @@ object Linkage {
     blocked.toDF()
       .groupBy(col("key"), col("salt")).as[(Long, Int), BlockedRow]
       .flatMapGroups { (keySalt, rows) =>
-        // fast path: two-party cells (the overwhelmingly common case)
-        val a = scala.collection.mutable.ArrayBuffer.empty[ClkRow]
-        val b = scala.collection.mutable.ArrayBuffer.empty[ClkRow]
-        var others: scala.collection.mutable.TreeMap[Int, scala.collection.mutable.ArrayBuffer[ClkRow]] = null
+        val byDset = scala.collection.mutable.TreeMap
+          .empty[Int, scala.collection.mutable.ArrayBuffer[ClkRow]]
         rows.foreach { r =>
-          if (r.dsetId == 0) a += ClkRow(r.recId, r.clk, r.pop)
-          else if (r.dsetId == 1) b += ClkRow(r.recId, r.clk, r.pop)
-          else {
-            if (others == null) others = scala.collection.mutable.TreeMap.empty
-            others.getOrElseUpdate(r.dsetId, scala.collection.mutable.ArrayBuffer.empty) +=
-              ClkRow(r.recId, r.clk, r.pop)
-          }
+          byDset.getOrElseUpdate(r.dsetId, scala.collection.mutable.ArrayBuffer.empty) +=
+            ClkRow(r.recId, r.clk, r.pop)
         }
-        val cands =
-          if (others == null) {
-            comparisons.foreach(_.add(a.length.toLong * b.length))
-            DiceKernel.blockDiceTopK(a.toArray, b.toArray, threshold, k, 0, 1)
-          } else {
-            // multiparty: every ordered dataset pair (i0 < i1), like
-            // the reference's itertools.combinations
-            val byDset = scala.collection.mutable.TreeMap(0 -> a, 1 -> b) ++ others
-            val dsets = byDset.iterator.filter(_._2.nonEmpty).map(_._1).toArray
-            dsets.iterator.zipWithIndex.flatMap { case (d0, idx) =>
-              dsets.iterator.drop(idx + 1).flatMap { d1 =>
-                val x = byDset(d0); val y = byDset(d1)
-                comparisons.foreach(_.add(x.length.toLong * y.length))
-                DiceKernel.blockDiceTopK(x.toArray, y.toArray, threshold, k, d0, d1)
-              }
-            }
+        val sides = byDset.iterator
+          .map { case (d, rs) => (d, new DiceKernel.Packed(rs.toArray)) }.toArray
+        sides.indices.iterator.flatMap { i =>
+          (i + 1 until sides.length).iterator.flatMap { j =>
+            val (d0, a) = sides(i); val (d1, b) = sides(j)
+            comparisons.foreach(_.add(a.n.toLong * b.n))
+            kernel(a, b, d0, d1)
           }
-        cands.map(c => (keySalt._1, c.sim, c.dset0, c.dset1, c.rec0, c.rec1))
+        }.map(c => (keySalt._1, c.sim, c.dset0, c.dset1, c.rec0, c.rec1))
       }
       .toDF("key", "sim", "dset0", "dset1", "rec0", "rec1")
   }

@@ -225,17 +225,6 @@ object RunPipeline {
       val t1 = System.nanoTime(); val s = (t1 - t0) / 1e9; t0 = t1; s
     }
 
-    // The heavy per-row stages before the blocking shuffle (ngram
-    // hashing + CLK construction, or CLK decode + band extraction)
-    // inherit the SCAN's partitioning. A small corpus packs into one
-    // or two scan partitions (openCostInBytes file packing), which
-    // would serialize those stages regardless of available cores; a
-    // 100 TB scan has thousands of partitions, so the rebalance never
-    // fires there and large runs keep the shuffle-free scan→encode.
-    val minParts = spark.sparkContext.defaultParallelism
-    def rebalanced[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
-      if (ds.rdd.getNumPartitions < minParts) ds.repartition(2 * minParts) else ds
-
     // ---- candidate generation ------------------------------------
     // candidatesKey: content key of the candidates snapshot stage
     val (pairs0, records, pagesWithDset, encCache, candidatesKey) = c.format match {
@@ -261,7 +250,7 @@ object RunPipeline {
         // join read the un-rebalanced scan — a count must not pay the
         // shuffle the scoring path needs
         val pruned = withDset0.select(col("url"), col("text"), col("graft_dset"))
-        val pairs = Linkage.candidatePairs(rebalanced(pruned), params,
+        val pairs = Linkage.candidatePairs(graft.ops.Dedup.rebalanced(pruned), params,
           col("graft_dset"), comparisons = Some(comparisons))
         // checkpointed: encode emits one row per input page, so the
         // encode snapshot's manifest holds the records count
@@ -279,7 +268,7 @@ object RunPipeline {
         // cached: the decode pass feeds both the records count and the
         // scoring pipeline — without the cache every downstream action
         // re-reads and re-validates the interop files
-        val enc = rebalanced(c.inputs.zipWithIndex
+        val enc = graft.ops.Dedup.rebalanced(c.inputs.zipWithIndex
           .map { case (p, ix) =>
             graft.io.ClkJsonSource.toEncoded(read(p), ix, params.blocking)
           }
@@ -407,10 +396,13 @@ object RunPipeline {
     * fallbacks only. builder.config() would override a spark-submit
     * `--conf` / spark-defaults.conf value (submit delivers those as
     * spark.* system properties, which the builder's explicit options
-    * take precedence over) — so only fill keys the submit left unset. */
+    * take precedence over) — so only fill keys the submit left unset;
+    * the `local[*]` master lets `sbt runMain` start a main directly. */
   def buildSession(appName: String): SparkSession = {
     val submitted = new org.apache.spark.SparkConf() // loads spark.* sys props
     var builder = SparkSession.builder().appName(appName)
+    if (!submitted.contains("spark.master"))
+      builder = builder.master("local[*]")
     if (!submitted.contains("spark.sql.shuffle.partitions"))
       builder = builder.config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.block.{Blocking, MinhashParams}
 import graft.core.Hashing
@@ -293,25 +293,25 @@ object Dedup {
     * stages downstream (shingling, minhash, normalization) inherit the
     * SCAN's partitioning, and a small corpus packs into 1-2 scan splits
     * (openCostInBytes file packing) — serializing those stages
-    * regardless of available cores. The partition-count guard is
-    * RunPipeline's encode rebalance; the 8 MB size gate below is this
-    * copy's alone (RunPipeline rebalances any under-partitioned scan).
+    * regardless of available cores. The one input rebalance rule: these
+    * operators and [[graft.RunPipeline]]'s encode input share it.
     * A 100 TB scan has thousands of partitions, so this never fires at
     * scale and large runs keep the shuffle-free scan→signature path.
     * Call with scan-shaped inputs (the operators' documented input
     * contract) — partition-count inspection of an exchange-bearing
     * plan could trigger upstream work. */
-  private def rebalanced(df: DataFrame): DataFrame = {
-    val minParts = df.sparkSession.sparkContext.defaultParallelism
+  private[graft] def rebalanced[T](ds: Dataset[T]): Dataset[T] = {
+    val minParts = ds.sparkSession.sparkContext.defaultParallelism
     // size gate: only rebalance when there is enough data for the extra
     // exchange to pay for itself (measured: repartitioning a ~600 KB
     // 5k-doc table into 64 partitions of ~80 rows DOUBLED its dedup
     // query time in task overhead, while the ~15 MB 50k-doc scale
-    // corpus gained ~10%). Plan statistics are free for scans.
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes > 8L * 1024 * 1024 && df.rdd.getNumPartitions < minParts)
-      df.repartition(2 * minParts)
-    else df
+    // corpus gained ~10%). Plan statistics are free for scans; the
+    // partition count (`ds.rdd` posts an execution) is read only past it.
+    val bytes = ds.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes > 8L * 1024 * 1024 && ds.rdd.getNumPartitions < minParts)
+      ds.repartition(2 * minParts)
+    else ds
   }
 
   /** Collapse identical texts to their min-id representative.
@@ -680,20 +680,5 @@ object Dedup {
       out.count()
       out
     } finally vecs.unpersist()
-  }
-
-  /** Shared tail: pairs → CC clusters → keeper = min id per cluster.
-    * Returns (id, clusterId, keeper); singletons keep themselves. */
-  def clustersWithKeeper(pairs: DataFrame, allIds: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val edges = pairs.select($"id0".as("src"), $"id1".as("dst"))
-    val comps = ConnectedComponents.run(edges)
-    allIds.select($"id")
-      .join(comps.withColumnRenamed("node", "id"), Seq("id"), "left")
-      .withColumn("clusterId", coalesce($"component", $"id"))
-      .drop("component")
-      .withColumn("keeper", min($"id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"clusterId")))
   }
 }

@@ -3,45 +3,23 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{BlockedRow, LinkageParams}
-import graft.sim.{ClkRow, SmcKernel}
+import graft.{BlockedRow, Linkage}
+import graft.sim.SmcKernel
 
 /** SMC similarity as a pipeline operator (S6 in SURVEY §2.3). */
 object Smc {
 
-  /** Deprecated alias mirroring the reference's `hamming_similarity`
-    * (`/root/reference/anonlink/similarities/_smc.py:126-133`). */
-  @deprecated("use Smc.scorePairs (simple matching coefficient)", "0.1.0")
-  def hammingSimilarity(blocked: Dataset[BlockedRow], threshold: Double, bits: Int): DataFrame =
-    scorePairs(blocked, threshold, bits)
-
-  /** Score blocked rows with SMC ≥ threshold (same cell layout as the
-    * Dice path). */
+  /** Score blocked rows with SMC ≥ threshold through the Dice path's
+    * cell scorer ([[graft.Linkage.scoreCells]]). Two-party only, like
+    * the reference, which raises NotImplementedError for other dataset
+    * counts (`/root/reference/anonlink/similarities/_smc.py:109-112`):
+    * a `dsetId` outside {0, 1} fails the query instead of being scored
+    * as if it were one of the two sides. The check is a row filter, so
+    * it keeps the blocking's partitioning for the cell grouping. */
   def scorePairs(blocked: Dataset[BlockedRow], threshold: Double, bits: Int): DataFrame = {
-    val spark = blocked.sparkSession
-    import spark.implicits._
-    // relational groupBy on the (key, salt) columns — same exchange
-    // elision as Linkage.scorePairsWithKey: when the upstream blocking
-    // semi-join already partitioned by key (unsalted path), the kernel
-    // grouping needs no second exchange of the clk payloads.
-    blocked.toDF()
-      .groupBy(col("key"), col("salt")).as[(Long, Int), BlockedRow]
-      .flatMapGroups { (_, rows) =>
-        val a = scala.collection.mutable.ArrayBuffer.empty[ClkRow]
-        val b = scala.collection.mutable.ArrayBuffer.empty[ClkRow]
-        rows.foreach { r =>
-          // the reference raises NotImplementedError for >2 datasets
-          // (`/root/reference/anonlink/similarities/_smc.py:109-112`);
-          // silently lumping dsetId>=2 into side 1 would cross-score
-          // mislabeled records, so fail loudly the same way.
-          require(r.dsetId <= 1,
-            s"SMC supports exactly 2 datasets; got dsetId=${r.dsetId}")
-          if (r.dsetId == 0) a += ClkRow(r.recId, r.clk, r.pop)
-          else b += ClkRow(r.recId, r.clk, r.pop)
-        }
-        SmcKernel.blockSmc(a.toArray, b.toArray, threshold, bits, 0, 1)
-      }
-      .toDF("sim", "dset0", "dset1", "rec0", "rec1")
+    val twoParty = blocked.where(assert_true(col("dsetId").between(0, 1),
+      lit("SMC supports exactly 2 datasets (dsetId 0 and 1)")).isNull)
+    Linkage.scoreCells(twoParty, SmcKernel.blockSmc(_, _, threshold, bits, _, _)).drop("key")
   }
 
   /** SMC's top-k rule: keep a pair iff it ranks ≤ k on **both** sides,

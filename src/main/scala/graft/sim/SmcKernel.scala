@@ -16,19 +16,18 @@ import graft.solve.Candidate
   */
 object SmcKernel {
 
-  /** Score all pairs with smc >= threshold in one cell. Prefilter:
+  /** Score all pairs with smc >= threshold in one cell of packed sides
+    * (the SMC kernel of [[graft.Linkage.scoreCells]]). Prefilter:
     * xor >= |p0-p1|, so smc <= 1 - |p0-p1|/bits — skip when that bound
     * is below the threshold. */
   def blockSmc(
-      aRows: Array[ClkRow],
-      bRows: Array[ClkRow],
+      a: DiceKernel.Packed,
+      b: DiceKernel.Packed,
       threshold: Double,
       bits: Int,
       dset0: Int,
       dset1: Int): Iterator[Candidate] = {
-    if (aRows.isEmpty || bRows.isEmpty) return Iterator.empty
-    val a = new DiceKernel.Packed(aRows)
-    val b = new DiceKernel.Packed(bRows)
+    if (a.n == 0 || b.n == 0) return Iterator.empty
     require(a.width == b.width, s"inconsistent CLK width: ${a.width} vs ${b.width} words")
     val width = a.width
     val w16 = width == 16

@@ -31,36 +31,13 @@ import org.apache.spark.sql.functions._
   */
 object Evaluation {
 
-  /** The lazy single-action (tp, pred_pairs, truth_pairs) aggregate —
-    * split out so a plan audit can explain the grouping-sets plan that
-    * [[pairwise]] collects eagerly. */
-  private[graft] def pairSums(joined: DataFrame,
-      c2: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-    joined
-      .groupingSets(
-        Seq(Seq(col("cid"), col("entityId")), Seq(col("cid")), Seq(col("entityId"))),
-        col("cid"), col("entityId"))
-      .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
-      .agg(
-        coalesce(sum(when(col("gid") === 0, c2(col("n")))), lit(0L)).as("tp"),
-        coalesce(sum(when(col("gid") === 1, c2(col("n")))), lit(0L)).as("pred_pairs"),
-        coalesce(sum(when(col("gid") === 2, c2(col("n")))), lit(0L)).as("truth_pairs"))
-
-  /** The record-level (cid, entityId) join with singleton back-fill —
-    * shared by [[pairwise]] and the plan audit. */
-  private[graft] def joinedCells(truth: DataFrame, clusters: DataFrame): DataFrame =
-    truth
-      .join(clusters, Seq("dsetId", "recId"), "left")
-      .withColumn("cid", coalesce(col("clusterId"),
-        ConnectedComponents.Encoding.nodeIdCol(col("dsetId"), col("recId"))))
-
   /** Pairwise precision/recall/F1 of a cluster assignment vs truth.
     *
     * Evaluates EAGERLY in ONE Spark action: the three pair sums (tp /
     * predicted / truth) come from a single GROUPING SETS aggregation
     * over the record-level join — grouping set (cid, entityId) yields
     * the intersection cells, (cid) and (entityId) the two marginals —
-    * chained into one final one-row aggregate ([[pairSums]]). One
+    * chained into one final one-row aggregate. One
     * scan, one shuffle (the Expand triples rows, but map-side partial
     * aggregation collapses them to ~3× the cell count before the
     * exchange), one collect; nothing cached, so nothing can leak
@@ -81,10 +58,13 @@ object Evaluation {
     // with an overflow error rather than returning a rounded count.
     val c2 = (n: org.apache.spark.sql.Column) => shiftright(n * (n - 1), 1)
     // Unmatched records become singleton clusters keyed by their own
-    // node id ([[joinedCells]]). Cluster ids are node ids of MEMBER
-    // records (CC minima / greedy rec0), so a non-member's node id
-    // cannot collide with a real cluster's id.
-    val joined = joinedCells(truth, clusters)
+    // node id. Cluster ids are node ids of MEMBER records (CC minima /
+    // greedy rec0), so a non-member's node id cannot collide with a
+    // real cluster's id.
+    val joined = truth
+      .join(clusters, Seq("dsetId", "recId"), "left")
+      .withColumn("cid", coalesce(col("clusterId"),
+        ConnectedComponents.Encoding.nodeIdCol(col("dsetId"), col("recId"))))
     // ONE record-level GROUPING SETS aggregation: set (cid, entityId)
     // produces the intersection-cell counts (→ tp), set (cid) the
     // predicted-cluster sizes (→ pred_pairs), set (entityId) the truth
@@ -94,7 +74,16 @@ object Evaluation {
     // (per-entity marginal). The chained one-row aggregate folds the
     // three C(n,2) sums in the same single job — no cache, no second
     // scan, one collect.
-    val r = pairSums(joined, c2).collect().head
+    val r = joined
+      .groupingSets(
+        Seq(Seq(col("cid"), col("entityId")), Seq(col("cid")), Seq(col("entityId"))),
+        col("cid"), col("entityId"))
+      .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
+      .agg(
+        coalesce(sum(when(col("gid") === 0, c2(col("n")))), lit(0L)).as("tp"),
+        coalesce(sum(when(col("gid") === 1, c2(col("n")))), lit(0L)).as("pred_pairs"),
+        coalesce(sum(when(col("gid") === 2, c2(col("n")))), lit(0L)).as("truth_pairs"))
+      .collect().head
     val (tp, predPairs, truthPairs) = (r.getLong(0), r.getLong(1), r.getLong(2))
     // same IEEE op order as the DuckDB oracle's CASE/CAST arithmetic
     val precision = if (predPairs == 0) 0.0 else tp.toDouble / predPairs

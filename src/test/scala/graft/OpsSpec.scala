@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.BitVector
 import graft.ops._
-import graft.sim.{ClkRow, SmcKernel}
+import graft.sim.{ClkRow, DiceKernel, SmcKernel}
 
 class OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -36,11 +36,42 @@ class OpsSpec extends AnyFunSuite {
     val a = mk(30); val b = mk(40)
     for (t <- Seq(0.0, 0.45, 0.55, 1.0)) {
       val got = SmcKernel.blockSmc(
-        a.map { case (id, w) => ClkRow(id, BitVector.toBytes(w), BitVector.popcount(w)) }.toArray,
-        b.map { case (id, w) => ClkRow(id, BitVector.toBytes(w), BitVector.popcount(w)) }.toArray,
+        new DiceKernel.Packed(a.map { case (id, w) => ClkRow(id, BitVector.toBytes(w), BitVector.popcount(w)) }.toArray),
+        new DiceKernel.Packed(b.map { case (id, w) => ClkRow(id, BitVector.toBytes(w), BitVector.popcount(w)) }.toArray),
         t, 1024, 0, 1).toSeq.sorted(graft.solve.Candidate.globalOrdering)
       val want = SmcKernel.naiveSmc(a, b, t, 1024).sorted(graft.solve.Candidate.globalOrdering)
       assert(got == want, s"t=$t")
+    }
+  }
+
+  test("smc operator == naive oracle under NoBlocking, salted or not; other dsetIds fail loudly") {
+    val rnd = new scala.util.Random(11)
+    def mk(dsetId: Int, n: Int) = (0 until n).map { _ =>
+      val w = Array.fill(16)(rnd.nextLong())
+      EncodedRecord(dsetId, rnd.nextLong(), "", BitVector.toBytes(w), BitVector.popcount(w), Array(0L))
+    }
+    val a = mk(0, 20); val b = mk(1, 25)
+    def words(rs: Seq[EncodedRecord]) = rs.map(r => (r.recId, BitVector.fromBytes(r.clk)))
+    val want = SmcKernel.naiveSmc(words(a), words(b), 0.5, 1024).sorted(graft.solve.Candidate.globalOrdering)
+    assert(want.nonEmpty)
+    // 20 × 25 = 500 comparisons: the default budget keeps the one key
+    // whole, a budget of 50 salts it into a 3 × 4 grid of cells
+    for (budget <- Seq(LinkageParams().pairBudget, 50L)) {
+      val (blocked, salted) = Linkage.blockAndSaltWithStats((a ++ b).toDS(),
+        LinkageParams(blocking = NoBlocking, pairBudget = budget))
+      assert(salted == (budget == 50L))
+      val got = Smc.scorePairs(blocked, 0.5, 1024).collect()
+        .map(r => graft.solve.Candidate(r.getDouble(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+        .toSeq.sorted(graft.solve.Candidate.globalOrdering)
+      assert(got == want, s"pairBudget=$budget")
+    }
+    // SMC is two-party (ref _smc.py:109-112): a third dataset, or a
+    // signed id, must fail instead of being scored as dataset 1
+    for (bad <- Seq(2, -1)) {
+      val blocked = Linkage.blockAndSalt((a ++ b ++ mk(bad, 3)).toDS(), LinkageParams(blocking = NoBlocking))
+      val e = intercept[Exception](Smc.scorePairs(blocked, 0.5, 1024).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("SMC supports exactly 2 datasets")), s"dsetId=$bad: $e")
     }
   }
 

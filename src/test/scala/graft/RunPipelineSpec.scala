@@ -381,11 +381,12 @@ class RunPipelineSpec extends AnyFunSuite {
     val cfg = RunPipeline.Config(inputs = Seq(s"$base/all"), dsetCol = Some("dsetId"),
       out = s"$base/out_actions", checkpointDir = Some(s"$base/ckpt_actions"))
     val n = SparkTestBase.countRootActions { RunPipeline.run(spark, cfg) }
-    // the input rebalance's partition-count probe (an execution with no
-    // job), encode snapshot write, hot-key census, candidates snapshot
-    // write, the clustering gate collect, the driver-built table's
-    // materialization, clusters snapshot write, output write
-    assert(n == 8, s"a checkpointed run executed $n root actions (pinned: 8) — " +
+    // encode snapshot write, hot-key census, candidates snapshot write,
+    // the clustering gate collect, the driver-built table's
+    // materialization, clusters snapshot write, output write (the input
+    // rebalance reads plan statistics first: this small scan is under
+    // its size gate, so its partition count is never probed)
+    assert(n == 7, s"a checkpointed run executed $n root actions (pinned: 7) — " +
       "a count-only pass over a stage that was just written came back")
   }
 }
