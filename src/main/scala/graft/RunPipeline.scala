@@ -42,9 +42,10 @@ import org.apache.spark.sql.functions._
   *    [[graft.io.ClkJsonSource.toEncoded]]).
   *
   * Solvers: `components` (transitive closure, V2′), `greedy`
-  * (exact distributed 2-party greedy, V2″), `probabilistic`
-  * (distributed probabilistic greedy, V2‴; `--merge-threshold`,
-  * `--allow-same-dataset`).
+  * (the reference `greedy_solve`, exact for any number of datasets,
+  * V2″), `probabilistic` (distributed probabilistic greedy, V2‴;
+  * `--merge-threshold`, `--allow-same-dataset`). Both greedy solvers
+  * run [[graft.solve.DistributedProbGreedy]].
   *
   * `--checkpoint <dir>` makes every stage resumable from Parquet
   * snapshots with per-file lineage manifests
@@ -184,7 +185,9 @@ object RunPipeline {
       |  [--blocking minhash|bitband|none]     (default minhash; CLK formats
       |                             require bitband or none)
       |  [--pair-budget N]          max comparisons per block cell before salting
-      |  [--solver components|greedy|probabilistic]  (default components)
+      |  [--solver components|greedy|probabilistic]  (default components;
+      |                             greedy = reference greedy_solve, any number
+      |                             of datasets)
       |  [--merge-threshold 0.5]    probabilistic solver group-merge fraction
       |  [--allow-same-dataset]     probabilistic: allow same-dataset co-clustering
       |  [--checkpoint <dir>]       stage snapshots; re-submit with same args resumes
@@ -288,9 +291,9 @@ object RunPipeline {
     // one materialization serves the pair count, the optional pairs
     // write and the solver (snapshot-backed when checkpointing)
     val pairs = if (ckptEff.isDefined) pairs0 else pairs0.cache()
-    // everything below can throw (solver preconditions, convergence
-    // guards, write failures): the finally releases whatever this run
-    // cached, so a failed submit in a long-lived session leaks nothing
+    // everything below can throw (convergence guards, write failures):
+    // the finally releases whatever this run cached, so a failed submit
+    // in a long-lived session leaks nothing
     var clustersRef: Option[DataFrame] = None
     try {
     // checkpointed: the candidates snapshot's manifest; otherwise the
@@ -307,20 +310,7 @@ object RunPipeline {
     val clusters = c.solver match {
       case "components" => Linkage.clusters(pairs, params, inputKey)
       case "greedy" =>
-        // matching2Party documents (but cannot itself cheaply verify)
-        // the 2-party precondition; enforce it here where the pairs are
-        // already materialized — a >2-party run must not silently
-        // produce a wrong matching. The matching windows on rec0/rec1
-        // generically, so ANY single cross-dataset combo is valid (a
-        // 1-based --dset-col coding like {1,2} must not be rejected)
-        val combos = pairs.select(col("dset0"), col("dset1"))
-          .distinct().limit(2).collect()
-        require(combos.length <= 1 &&
-            combos.forall(r => r.getInt(0) != r.getInt(1)),
-          "--solver greedy requires exactly two datasets (one cross-" +
-            "dataset pair combination); use components or probabilistic " +
-            "for multiparty")
-        graft.solve.DistributedGreedy.clusters2Party(pairs,
+        graft.solve.DistributedProbGreedy.greedyClusters(pairs,
           checkpointDir = ckptEff.map(d => s"$d/greedy"))
       case "probabilistic" =>
         graft.solve.DistributedProbGreedy.clusters(pairs,

@@ -191,18 +191,21 @@ object SparkEntry {
           functions.BitFunctions.dice_bin($"clk0", $"clk1").as("dice"))
     }),
     "linkage_greedy_clusters" -> ((s, _) => {
-      // exact distributed greedy matching (bit-parity with the
-      // reference greedy solver on bipartite input); pairs tapped so
-      // the oracle replays the same greedy sweep as unrolled
-      // mutual-best rounds (OracleSqlGen.greedyClustersSql)
-      graft.solve.DistributedGreedy.clusters2Party(
+      // the reference greedy_solve, exact for any input
+      // (solve.DistributedProbGreedy at merge_threshold = 1, not
+      // deduplicated; clusters labelled by the founding pair's rec0
+      // endpoint); pairs tapped so the oracle replays the same greedy
+      // sweep as unrolled mutual-best rounds, which equal it on these
+      // deduped bipartite pairs (OracleSqlGen.greedyClustersSql)
+      graft.solve.DistributedProbGreedy.greedyClusters(
         dumpAux("linkage_greedy_pairs",
           Linkage.candidatePairs(corpus(s), linkParams, col("dsetId"))))
     }),
     "linkage_prob_clusters" -> ((s, _) => {
       // V2‴: distributed EXACT multiparty probabilistic greedy
-      // (solve.DistributedProbGreedy — component-parallel, bit-exact
-      // vs the sequential reference port). At merge_threshold = 1.0 on
+      // (solve.DistributedProbGreedy — solved on the driver when small,
+      // component-parallel otherwise; bit-exact vs the sequential
+      // reference port either way). At merge_threshold = 1.0 on
       // the pipeline's deduped BIPARTITE pairs it coincides with
       // greedy matching: a group's only cross-edges to a lone record
       // come from its single opposite-dataset member, so the overlap

@@ -206,24 +206,39 @@ object OracleSqlGen {
        |SELECT doc_id, $bandKey AS band_key FROM bs""".stripMargin
   }
 
-  /** Oracle for `linkage_greedy_clusters`: the reference greedy sweep
-    * equals iterated mutual-best matching (total 5-tuple order — see
-    * DistributedGreedy's scaladoc), unrolled here as `rounds` chained
-    * MATERIALIZED CTE rounds (DuckDB inlines multiply-referenced CTEs
-    * otherwise, going exponential). The engine completes ANY depth (60
-    * distributed rounds + a sequential driver finish), so the unroll
+  /** Oracle for `linkage_greedy_clusters` and `linkage_prob_clusters`.
+    *
+    * On bipartite, pair-deduplicated candidates the reference greedy
+    * sweep is greedy maximal matching in the global candidate order:
+    * walk pairs by `(-sim, dset0, dset1, rec0, rec1)` and take a pair
+    * iff neither endpoint is matched yet (groups never exceed size 2,
+    * `tests/test_solving.py:test_greedy_2p`). That sweep equals iterated
+    * MUTUAL-BEST matching: a pair the sweep takes is exactly one that
+    * is the best remaining pair of BOTH its endpoints at some round
+    * (the parallel greedy-matching equivalence, Manne & Bisseling's
+    * dominant-edge argument; exact because the 5-tuple order is total,
+    * so "best" is unique). Each round ranks the remaining pairs per
+    * endpoint, keeps the rank-1 × rank-1 pairs, and drops every pair
+    * touching a matched record.
+    *
+    * The rounds are unrolled as `rounds` chained MATERIALIZED CTEs
+    * (DuckDB inlines multiply-referenced CTEs otherwise, going
+    * exponential). The engine solves any input exactly, so the unroll
     * only bounds what the ORACLE can follow: an input needing more
     * rounds emits a poison row (-99,-99,-99) — a loud verification
     * failure on correct engine output, never a silent false pass. 64
     * rounds ≈ 128-edge staircase chains, far beyond what the deduped
-    * top-k candidate streams produce. */
-  /** @param minLabelCluster relabel each cluster to the MIN member
-    *   node id instead of the rec0-endpoint node id — the cluster-id
-    *   convention of `solve.DistributedProbGreedy` (multiparty groups
-    *   have no canonical "first" endpoint, so the solver uses the
-    *   minimum; on bipartite matching output the two conventions
-    *   differ only in the label, and this window makes the oracle
-    *   match it exactly). */
+    * top-k candidate streams produce.
+    *
+    * Clusters are labelled with the matched pair's rec0-endpoint node
+    * id, the first member of the group the solver founds from it.
+    *
+    * @param minLabelCluster relabel each cluster to the MIN member
+    *   node id instead — the cluster-id convention of
+    *   `solve.DistributedProbGreedy.clusters` (multiparty groups have no
+    *   canonical "first" endpoint, so it uses the minimum; on bipartite
+    *   matching output the two conventions differ only in the label,
+    *   and this window makes the oracle match it exactly). */
   def greedyClustersSql(srcGlob: String, rounds: Int = 64,
       minLabelCluster: Boolean = false): String = {
     val sort = "sim DESC, dset0, dset1, rec0, rec1"

@@ -8,17 +8,18 @@ import org.apache.spark.sql.functions._
   * "Connected Components in MapReduce and Beyond", SoCC'14) over the
   * thresholded candidate-pair graph.
   *
-  * This is the scale path for the reference's greedy solver
-  * (`/root/reference/anonlink/solving/_multiparty_solving_python.py`):
-  * with a high threshold + top-k upstream, greedy solving approaches
-  * the transitive closure of mutual-best edges, and the BASELINE.json
-  * F1 ≥ 0.99 budget absorbs the residual semantic gap (SURVEY §2.5 V2).
+  * This is the `components` solver: with a high threshold + top-k
+  * upstream, the reference's greedy solver (anonlink
+  * `solving/_multiparty_solving_python.py`) approaches the transitive
+  * closure of mutual-best edges, and the BASELINE.json F1 ≥ 0.99
+  * budget absorbs the residual semantic gap (SURVEY §2.5 V2). The
+  * exact greedy solvers ([[DistributedProbGreedy]]) run it to split
+  * their input into components.
   *
   * Converges in O(log n) rounds on any graph (no diameter dependence —
   * a chain of length n labels in ~log n rounds, unlike naive label
   * propagation). Each round is two self-joins; intermediate results are
-  * checkpointed to truncate lineage, and each round's edge count is an
-  * accumulator-style metric surfaced to the caller.
+  * checkpointed to truncate lineage.
   */
 object ConnectedComponents {
 
@@ -32,7 +33,6 @@ object ConnectedComponents {
   def run(
       edges: DataFrame,
       maxIterations: Int = 50,
-      onRound: (Int, Long) => Unit = (_, _) => (),
       /** once the (deduped) edge set fits comfortably on the driver,
         * label it with a sequential union-find instead of iterating
         * Spark rounds — each distributed round costs two self-joins +
@@ -71,10 +71,8 @@ object ConnectedComponents {
     // the clamped case driverFinishThreshold + 1 > Int.MaxValue - 1,
     // where length <= threshold would hold on a TRUNCATED edge set and
     // label components from incomplete data)
-    if (gathered.length < gateLimit) {
-      onRound(0, gathered.length.toLong)
+    if (gathered.length < gateLimit)
       return minRootLabels(gathered.iterator).toSeq.toDF("node", "component")
-    }
 
     e = ckpt(e)
 
@@ -130,7 +128,6 @@ object ConnectedComponents {
       val after = sig(small)
       val changed = after != prevSig
       prevSig = after
-      onRound(iter, after._1)
       e = small
       converged = !changed
       iter += 1
@@ -228,8 +225,9 @@ object ConnectedComponents {
     } finally { if (ownCache) pairs.unpersist(blocking = true) }
   }
 
-  /** [[clusterPairs]]' pair-count gate: [[run]]'s default edge threshold. */
-  private val DriverFinishPairs = 100000L
+  /** [[clusterPairs]]' pair-count gate: [[run]]'s default edge threshold,
+    * and the default driver finish of [[DistributedProbGreedy]]. */
+  private[solve] val DriverFinishPairs = 100000L
 
   /** Sequential min-root union-find over a small edge list: maps every
     * endpoint of a non-self-loop edge to the smallest node id in its

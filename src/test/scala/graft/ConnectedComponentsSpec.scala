@@ -205,7 +205,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("every solver labels a cluster with exactly one member's node id") {
     val rnd = new scala.util.Random(77)
-    // two-party, pair-deduplicated candidates (greedy's precondition)
+    // two-party, pair-deduplicated candidates (the pipeline's shape)
     val pairs = (1 to 150)
       .map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .distinct
@@ -213,7 +213,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .toDF("sim", "dset0", "dset1", "rec0", "rec1")
     val solved = Seq(
       "components" -> ConnectedComponents.clusterPairs(pairs),
-      "greedy" -> graft.solve.DistributedGreedy.clusters2Party(pairs),
+      "greedy" -> graft.solve.DistributedProbGreedy.greedyClusters(pairs),
       "probabilistic" -> graft.solve.DistributedProbGreedy.clusters(pairs, 0.5))
     for ((name, clusters) <- solved) {
       val rows = clusters.as[(Int, Long, Long)].collect().toSeq

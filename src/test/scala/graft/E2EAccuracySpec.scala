@@ -17,6 +17,23 @@ class E2EAccuracySpec extends AnyFunSuite {
   private def overlapCorpus(samples: Int, proportion: Double, seed: Long) =
     Corpus.overlapLabeled(spark, samples.toLong, proportion, seed)
 
+  /** (matches, false matches) of a 2-party greedy cluster table: the
+    * matched pairs are its 2-member clusters, judged by JOIN against the
+    * planted entity labels (no driver collect). */
+  private def matchCounts(clusters: org.apache.spark.sql.DataFrame,
+      pages: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val truth = pages.select(col("dsetId"),
+      Linkage.recIdCol(col("url")).as("recId"), col("entityId"))
+    val matched = clusters.join(truth, Seq("dsetId", "recId"))
+      .groupBy(col("clusterId"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("entityId")).as("entities"))
+      .where(col("n") === 2)
+      .cache()
+    val counts = (matched.count(), matched.where(col("entities") > 1).count())
+    matched.unpersist(); clusters.unpersist()
+    counts
+  }
+
   test("accuracy: <=2% false matches; expected match count (ref test_e2e.py:36-57)") {
     val samples = 400
     val proportion = 0.75
@@ -59,19 +76,11 @@ class E2EAccuracySpec extends AnyFunSuite {
     val params = LinkageParams(blocking = MinhashBlocking(), threshold = 0.8, k = Some(5))
     val pairs = Linkage.candidatePairs(pages, params, col("dsetId")).cache()
     // distributed exact greedy with the driver-finish shortcut DISABLED
-    // (threshold 0) so the mutual-best iteration is what's exercised;
+    // (threshold 0) so the per-component path is what's exercised;
     // evaluation by JOIN against ground truth (no driver collect)
-    val matched = graft.solve.DistributedGreedy.matching2Party(pairs,
+    val clusters = graft.solve.DistributedProbGreedy.greedyClusters(pairs,
       driverFinishThreshold = 0L)
-    val truth = pages.select(col("dsetId"),
-      Linkage.recIdCol(col("url")).as("recId"), col("entityId"))
-    val ev = matched
-      .join(truth.where(col("dsetId") === 0)
-        .select(col("recId").as("rec0"), col("entityId").as("e0")), "rec0")
-      .join(truth.where(col("dsetId") === 1)
-        .select(col("recId").as("rec1"), col("entityId").as("e1")), "rec1")
-    val total = ev.count()
-    val falseM = ev.where(col("e0") =!= col("e1")).count()
+    val (total, falseM) = matchCounts(clusters, pages)
     val allowedFalse = math.ceil(total * 0.02).toLong
     assert(falseM <= allowedFalse, s"false=$falseM of $total")
     assert(math.abs(samples * proportion - total) <= allowedFalse,
@@ -100,16 +109,8 @@ class E2EAccuracySpec extends AnyFunSuite {
       s"candidate pairs $nPairs < 95% of expected $expected")
     assert(nPairs <= 2L * params.k.get * samples,
       s"candidate pairs $nPairs exceed the top-k volume bound")
-    val matched = graft.solve.DistributedGreedy.matching2Party(pairs)
-    val truth = pages.select(col("dsetId"),
-      Linkage.recIdCol(col("url")).as("recId"), col("entityId"))
-    val ev = matched
-      .join(truth.where(col("dsetId") === 0)
-        .select(col("recId").as("rec0"), col("entityId").as("e0")), "rec0")
-      .join(truth.where(col("dsetId") === 1)
-        .select(col("recId").as("rec1"), col("entityId").as("e1")), "rec1")
-    val total = ev.count()
-    val falseM = ev.where(col("e0") =!= col("e1")).count()
+    val (total, falseM) = matchCounts(
+      graft.solve.DistributedProbGreedy.greedyClusters(pairs), pages)
     val allowedFalse = math.ceil(total * 0.02).toLong
     assert(falseM <= allowedFalse, s"false=$falseM of $total")
     assert(math.abs(samples * proportion - total) <= allowedFalse,

@@ -152,7 +152,7 @@ class RunPipelineSpec extends AnyFunSuite {
       clusterSet(spark.read.parquet(out2)))
   }
 
-  test("greedy solver: CLI run == DistributedGreedy.clusters2Party; " +
+  test("greedy solver: CLI run == DistributedProbGreedy.greedyClusters; " +
       "probabilistic run == DistributedProbGreedy.clusters") {
     val (base, a, b) = corpusDirs
     val outG = s"$base/out_greedy"; val outP = s"$base/out_prob"
@@ -168,30 +168,40 @@ class RunPipelineSpec extends AnyFunSuite {
         .withColumn("graft_dset", lit(1)))
     val params = LinkageParams(threshold = 0.8)
     val pairs = Linkage.candidatePairs(pages, params, col("graft_dset")).cache()
-    val expG = graft.solve.DistributedGreedy.clusters2Party(pairs)
+    val expG = graft.solve.DistributedProbGreedy.greedyClusters(pairs)
     assert(clusterSet(spark.read.parquet(outG)) == clusterSet(expG))
     val expP = graft.solve.DistributedProbGreedy.clusters(pairs, 0.5)
     assert(clusterSet(spark.read.parquet(outP)) == clusterSet(expP))
     pairs.unpersist(); expP.unpersist()
   }
 
-  test("greedy solver rejects >2-party pairs instead of silently " +
-      "mis-matching — and the failed run releases its caches") {
+  test("3-party greedy run == Greedy.greedySolve over the same pairs; " +
+      "a failed run releases its caches") {
     val base = corpusDirs._1
     val labeled = Corpus.labeledPages(spark, Corpus.Params(
       entities = 40L, seed = 13L, minVariants = 3, maxVariants = 3))
     labeled.select(col("url"), col("warc_ts"), col("html"), col("text"),
         col("lang"), (col("variantId") % 3).as("party"))
       .write.mode("overwrite").parquet(s"$base/three")
+    val cfg = RunPipeline.Config(inputs = Seq(s"$base/three"),
+      dsetCol = Some("party"), out = s"$base/out_three", solver = "greedy",
+      pairsOut = Some(s"$base/pairs_three"))
+    RunPipeline.run(spark, cfg)
+    val pairs = spark.read.parquet(s"$base/pairs_three")
+    assert(pairs.select(col("dset0"), col("dset1")).distinct().count() == 3L)
+    val want = Linkage.greedyClusters(pairs)
+      .map(_.map(r => (r.dset, r.rec)).toSet).toSet
+    assert(clusterSet(spark.read.parquet(s"$base/out_three")) == want)
+    assert(want.exists(_.size > 2), "no multiparty group — weak test input")
+
+    // --pairs-out under a regular file fails AFTER the candidate pairs
+    // were cached and materialized — the failure path must not pin them
+    // in the session
+    val blocker = java.nio.file.Files.createTempFile("runpipe", ".blocker").toString
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException] {
-      RunPipeline.run(spark, RunPipeline.Config(
-        inputs = Seq(s"$base/three"), dsetCol = Some("party"),
-        out = s"$base/out_three", solver = "greedy"))
+    intercept[Exception] {
+      RunPipeline.run(spark, cfg.copy(pairsOut = Some(s"$blocker/pairs")))
     }
-    assert(e.getMessage.contains("two datasets"))
-    // the guard fired AFTER the candidate pairs were cached and
-    // materialized — the failure path must not pin them in the session
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty, s"failed run leaked cached RDDs: $leaked")
   }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.BitVector
 import graft.functions.BitFunctions
-import graft.solve.{Candidate, DistributedGreedy, Greedy}
+import graft.solve.{Candidate, DistributedProbGreedy, Greedy}
 
 class SolverDistSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -14,22 +14,29 @@ class SolverDistSpec extends AnyFunSuite {
     cands.map(c => (c.sim, c.dset0, c.dset1, c.rec0, c.rec1))
       .toDF("sim", "dset0", "dset1", "rec0", "rec1")
 
+  /** A cluster table as a set of groups; releases the table. */
+  private def groupsOf(out: org.apache.spark.sql.DataFrame): Set[Set[(Int, Long)]] = {
+    val groups = out.collect()
+      .groupBy(_.getLong(2))
+      .values.map(_.map(r => (r.getInt(0), r.getLong(1))).toSet).toSet
+    out.unpersist()
+    groups
+  }
+
+  private def greedyGroups(cands: Seq[Candidate]): Set[Set[(Int, Long)]] =
+    Greedy.greedySolve(cands).map(_.map(r => (r.dset, r.rec)).toSet).toSet
+
   test("distributed greedy matching == sequential greedy oracle (random bipartite)") {
     val rnd = new scala.util.Random(77)
     for (trial <- 1 to 10) {
       val n = 50 + rnd.nextInt(100)
-      // unique (rec0, rec1) pairs — the pipeline guarantees this via
-      // Candidates.dedup, and the reference's own 2-party hypothesis
-      // strategy is dict-keyed by pair (test_solving.py:299-306).
-      // (With duplicate pairs at different sims the reference greedy
-      // can form >2 groups, which matching cannot represent.)
+      // repeated (rec0, rec1) pairs at different sims included: the
+      // per-component solve is the sequential solver, exact on any input
       val cands = (0 until n).map { _ =>
-        (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)
-      }.distinct.map { case (r0, r1) => Candidate(rnd.nextDouble(), 0, 1, r0, r1) }
-      val want = Greedy.greedySolve(cands)
-        .map(g => g.map(r => (r.dset, r.rec)).toSet).toSet
-      val got = DistributedGreedy.matching2Party(toDf(cands))
-        .collect().map(r => Set((r.getInt(1), r.getLong(3)), (r.getInt(2), r.getLong(4)))).toSet
+        Candidate(rnd.nextDouble(), 0, 1, rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)
+      }
+      val want = greedyGroups(cands)
+      val got = groupsOf(DistributedProbGreedy.greedyClusters(toDf(cands)))
       assert(got == want, s"trial $trial: ${got.size} vs ${want.size}")
     }
   }
@@ -38,14 +45,10 @@ class SolverDistSpec extends AnyFunSuite {
     Greedy.probabilisticGreedySolve(cands, mt, dd)
       .map(_.map(r => (r.dset, r.rec)).toSet).toSet
 
-  private def distGroups(cands: Seq[Candidate], mt: Double, dd: Boolean): Set[Set[(Int, Long)]] = {
-    val out = graft.solve.DistributedProbGreedy.clusters(toDf(cands), mt, dd)
-    val groups = out.collect()
-      .groupBy(_.getLong(2))
-      .values.map(_.map(r => (r.getInt(0), r.getLong(1))).toSet).toSet
-    out.unpersist()
-    groups
-  }
+  private def distGroups(cands: Seq[Candidate], mt: Double, dd: Boolean,
+      driverFinishThreshold: Long = 100000L): Set[Set[(Int, Long)]] =
+    groupsOf(DistributedProbGreedy.clusters(toDf(cands), mt, dd,
+      driverFinishThreshold = driverFinishThreshold))
 
   test("distributed probabilistic greedy == sequential port on the .75/.76 boundary goldens " +
     "(test_solving.py:422-459)") {
@@ -57,9 +60,10 @@ class SolverDistSpec extends AnyFunSuite {
       c(.7, (0, 0), (1, 0)),
       c(.6, (0, 0), (1, 1)),
       c(.5, (0, 1), (1, 0)))
-    for (mt <- Seq(0.0, 0.5, 0.75, 0.76, 1.0); dd <- Seq(true, false)) {
-      assert(distGroups(cands, mt, dd) == seqGroups(cands, mt, dd),
-        s"mergeThreshold=$mt deduplicated=$dd")
+    for (mt <- Seq(0.0, 0.5, 0.75, 0.76, 1.0); dd <- Seq(true, false);
+         threshold <- Seq(100000L, 0L)) {
+      assert(distGroups(cands, mt, dd, threshold) == seqGroups(cands, mt, dd),
+        s"mergeThreshold=$mt deduplicated=$dd driverFinishThreshold=$threshold")
     }
   }
 
@@ -77,7 +81,7 @@ class SolverDistSpec extends AnyFunSuite {
       val mt = Seq(0.3, 0.5, 0.76, 1.0)(trial % 4)
       val dd = trial % 2 == 0
       val want = seqGroups(cands, mt, dd)
-      val got = distGroups(cands, mt, dd)
+      val got = distGroups(cands, mt, dd, driverFinishThreshold = 0L)
       assert(got == want, s"trial $trial mt=$mt dd=$dd: ${got.size} vs ${want.size} groups")
       assert(want.nonEmpty, s"trial $trial degenerate (no groups) — weak test input")
     }
@@ -91,31 +95,30 @@ class SolverDistSpec extends AnyFunSuite {
     val df = pairs.toDF("sim", "dset0", "dset1", "rec0", "rec1")
     val deduped = graft.cand.Candidates.dedup(df)
     val dir = java.nio.file.Files.createTempDirectory("dgckpt").toString
-    val base = DistributedGreedy.matching2Party(deduped, driverFinishThreshold = 0L)
-      .collect().map(r => (r.getDouble(0), r.getLong(3), r.getLong(4))).toSet
-    val ck = DistributedGreedy.matching2Party(deduped, driverFinishThreshold = 0L,
-      checkpointDir = Some(dir))
-      .collect().map(r => (r.getDouble(0), r.getLong(3), r.getLong(4))).toSet
+    val base = groupsOf(DistributedProbGreedy.greedyClusters(deduped,
+      driverFinishThreshold = 0L))
+    val ck = groupsOf(DistributedProbGreedy.greedyClusters(deduped,
+      checkpointDir = Some(dir), driverFinishThreshold = 0L))
     assert(ck === base)
     assert(new java.io.File(dir).listFiles().nonEmpty)
   }
 
   test("adversarial staircase preferences: cascaded matching stays exact") {
     // sims descending along a chain a1-b1 > a2-b1 > a2-b2 > a3-b2 ...:
-    // only one edge is dominant per round, so the distributed rounds
-    // alone would need O(n) iterations — the driver-finish path must
-    // keep it exact.
+    // one connected component whose greedy cascade takes every other
+    // edge — iterated mutual-best rounds would need O(n) of them
     val n = 300
     val cands = (0 until n).flatMap { i =>
       Seq(
         Candidate(1.0 - (2 * i) * 1e-3, 0, 1, i.toLong, i.toLong),
         Candidate(1.0 - (2 * i + 1) * 1e-3, 0, 1, (i + 1).toLong, i.toLong))
     }
-    val want = Greedy.greedySolve(cands)
-      .map(g => g.map(r => (r.dset, r.rec)).toSet).toSet
-    val got = DistributedGreedy.matching2Party(toDf(cands), maxIterations = 20)
-      .collect().map(r => Set((r.getInt(1), r.getLong(3)), (r.getInt(2), r.getLong(4)))).toSet
-    assert(got == want && got.size == n)
+    val want = greedyGroups(cands)
+    for (threshold <- Seq(100000L, 0L)) {
+      val got = groupsOf(DistributedProbGreedy.greedyClusters(toDf(cands),
+        driverFinishThreshold = threshold))
+      assert(got == want && got.size == n, s"driverFinishThreshold=$threshold")
+    }
   }
 
   test("distributed greedy on pipeline candidates == oracle (E2E)") {
@@ -123,12 +126,41 @@ class SolverDistSpec extends AnyFunSuite {
       gen.Corpus.Params(entities = 150L, seed = 31L, minVariants = 2, maxVariants = 2))
     val params = LinkageParams(blocking = MinhashBlocking(), threshold = 0.7, k = Some(5))
     val pairs = Linkage.candidatePairs(pages, params, col("dsetId")).cache()
-    val want = Greedy.greedySolve(
+    val want = greedyGroups(
       pairs.collect().map(r => Candidate(r.getDouble(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSeq)
-      .map(g => g.map(r => (r.dset, r.rec)).toSet).toSet
-    val got = DistributedGreedy.matching2Party(pairs)
-      .collect().map(r => Set((r.getInt(1), r.getLong(3)), (r.getInt(2), r.getLong(4)))).toSet
+    val got = groupsOf(DistributedProbGreedy.greedyClusters(pairs))
     assert(got == want && got.nonEmpty)
+    pairs.unpersist()
+  }
+
+  test("property: greedyClusters == greedySolve and clusters(mt, dd) == " +
+      "probabilisticGreedySolve, on the driver and per component (2-3 datasets, " +
+      "sim ties, duplicate pairs, self-edges)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val cases = for {
+      nDsets <- Gen.choose(2, 3)
+      nRecs <- Gen.choose(2, 8)
+      n <- Gen.choose(0, 40)
+      // a 5-value sim grid makes ties common; equal endpoints give
+      // self-edges, repeated endpoints give duplicate pairs
+      cands <- Gen.listOfN(n, for {
+        sim <- Gen.choose(1, 5)
+        d0 <- Gen.choose(0, nDsets - 1); d1 <- Gen.choose(0, nDsets - 1)
+        r0 <- Gen.choose(0, nRecs - 1); r1 <- Gen.choose(0, nRecs - 1)
+      } yield Candidate(sim / 5.0, d0, d1, r0.toLong, r1.toLong))
+      mt <- Gen.oneOf(0.0, 0.5, 0.76, 1.0)
+      dd <- Gen.oneOf(true, false)
+    } yield (cands, mt, dd)
+    val prop = Prop.forAllNoShrink(cases) { case (cands, mt, dd) =>
+      Seq(100000L, 0L).forall { threshold =>
+        groupsOf(DistributedProbGreedy.greedyClusters(toDf(cands),
+          driverFinishThreshold = threshold)) == greedyGroups(cands) &&
+          distGroups(cands, mt, dd, threshold) == seqGroups(cands, mt, dd)
+      }
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
+      .withWorkers(1).withInitialSeed(17L), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
   test("multiparty scoring: 3 datasets produce all ordered dataset pairs like the reference") {
@@ -230,35 +262,5 @@ class SolverDistSpec extends AnyFunSuite {
       spark.sql("SELECT smc_bin(a, b, id) FROM clks").collect()
     }
     assert(err.getMessage.contains("literal"))
-  }
-
-  test("matching2Party raises when the round bound is exhausted with pairs remaining " +
-      "(no silent partial matching)") {
-    // staircase preferences: each mutual-best round consumes ONE pair
-    val stairs = Seq(
-      Candidate(1.0, 0, 1, 1L, 1L),
-      Candidate(0.9, 0, 1, 2L, 1L),
-      Candidate(0.8, 0, 1, 2L, 2L),
-      Candidate(0.7, 0, 1, 3L, 2L),
-      Candidate(0.6, 0, 1, 3L, 3L))
-    val e = intercept[IllegalStateException] {
-      DistributedGreedy.matching2Party(toDf(stairs), maxIterations = 1,
-        driverFinishThreshold = 0L)
-    }
-    assert(e.getMessage.contains("did not converge"))
-    intercept[IllegalArgumentException] {
-      DistributedGreedy.matching2Party(toDf(stairs), maxIterations = 0)
-    }
-    // the same staircase under a sane bound matches exactly
-    val ok = DistributedGreedy.matching2Party(toDf(stairs), driverFinishThreshold = 0L)
-      .collect().map(r => (r.getLong(3), r.getLong(4))).toSet
-    assert(ok == Set((1L, 1L), (2L, 2L), (3L, 3L)))
-    // boundary: the final allowed round consuming EVERY remaining pair
-    // is a complete matching, not a convergence failure (empty-remainder
-    // detection costs one extra round the bound must not have to fund)
-    val one = Seq(Candidate(1.0, 0, 1, 1L, 1L))
-    val got = DistributedGreedy.matching2Party(toDf(one), maxIterations = 1,
-      driverFinishThreshold = 0L).collect().map(r => (r.getLong(3), r.getLong(4))).toSet
-    assert(got == Set((1L, 1L)))
   }
 }
