@@ -480,13 +480,4 @@ object Linkage {
       else pairs.cache()
     (reusable, clusters(reusable, params, dsetIdExpr.toString))
   }
-
-  /** Driver-side exact solve for small candidate lists (the oracle
-    * path, V1): collect + greedy. */
-  def greedyClusters(pairs: DataFrame): Seq[Seq[graft.solve.Rec]] = {
-    val cands = pairs.select("sim", "dset0", "dset1", "rec0", "rec1")
-      .collect()
-      .map(r => Candidate(r.getDouble(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-    graft.solve.Greedy.greedySolve(cands.toSeq)
-  }
 }

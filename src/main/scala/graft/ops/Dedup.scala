@@ -25,12 +25,11 @@ import graft.solve.ConnectedComponents
   *     representative's cluster afterwards. Output-preserving: copies
   *     share all signatures, so un-collapsed they'd always land in one
   *     component whose min id IS the representative.
-  *  2. '''triangle tiling''' ([[bucketPairs]]) — a still-hot bucket
-  *     (many *distinct* near-identical docs) is split into bounded
-  *     cells that partition its unordered-pair set exactly, the
-  *     self-join analogue of `Linkage.saltExploded`'s bipartite salting
-  *     (itself the recast of the reference's `split_to_chunks`,
-  *     `/root/reference/anonlink/concurrency.py:39-86`).
+  *  2. '''star pairing''' ([[bucketPairs]]) — a still-hot bucket
+  *     (many *distinct* near-identical docs) pairs every member with
+  *     m deterministic anchors instead of enumerating its n²/2
+  *     triangle: n·m pairs, O(m) per record, the bucket kept
+  *     connected through the anchors.
   */
 object Dedup {
 
@@ -57,26 +56,20 @@ object Dedup {
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_copies"))
 
   /** All unordered same-bucket pairs `(id0 < id1)` from a `(bucket,
-    * id)` table, with hot buckets exactly triangle-tiled: a bucket with
-    * n rows where n·(n−1)/2 > `pairBudget` is split into
-    * s = ⌈n/√pairBudget⌉ slices by a deterministic id hash; a pair
-    * lands in exactly one cell (the diagonal cell for same-slice
-    * pairs, the (lo,hi) cell otherwise), so every cell holds ≤ ~2·√budget
-    * rows ⇒ ≤ ~budget pairs per task, and the union over cells is
-    * EXACTLY the bucket's pair set — no recall loss, just bounded
-    * tasks. Cold buckets pass through as a single cell.
+    * id)` table, under ONE hot-bucket rule: a bucket with n rows takes
+    * the '''star path''' iff its full triangle exceeds the budget
+    * (n·(n−1)/2 > `pairBudget`) AND the star is smaller than the
+    * triangle (n > 2m+1, m = `starFanout`); every other bucket emits
+    * its full triangle from one `collect_list` row.
     *
-    * '''Star fanout cap''' (`starFanout = Some(m)`): the tiling bounds
-    * pairs per TASK but a bucket's TOTAL pair set stays n·(n−1)/2 — a
-    * boilerplate-template cluster of 10^6 *distinct* near-identical
-    * pages (exact pre-collapse can't fire) would emit ~5·10^11
-    * verification pairs. With the cap, a bucket where the full
-    * triangle exceeds the star (n > 2m+1) switches to '''anchor/star
-    * pairing''': m anchors are chosen deterministically per bucket
-    * (smallest `xxhash64(id, bucket)`, total order) and every member
-    * is paired with every anchor — n·m pairs total, O(m) per record.
+    * Star path: m anchors are chosen deterministically per bucket
+    * (the m smallest `(mix64(id ^ mix64(bucket)), id)`, a total order)
+    * and every member is paired with every anchor — n·m pairs total,
+    * O(m) per record, where the triangle of a boilerplate-template
+    * cluster of 10^6 *distinct* near-identical pages (exact
+    * pre-collapse can't fire) would be ~5·10^11 verification pairs.
     *
-    * Recall semantics of the cap: two non-anchor members are never
+    * Recall semantics of the star: two non-anchor members are never
     * verified directly — they end up in one cluster iff both verify
     * against a common anchor, so per-bucket CONNECTIVITY through the
     * anchors is preserved (a genuinely near-identical cluster stays
@@ -84,22 +77,19 @@ object Dedup {
     * individual non-anchor/non-anchor pair below-threshold-to-all-
     * anchors is missed. Dedup needs the cluster connected, not every
     * pair enumerated — the same trade the linkage path makes with
-    * per-left top-k inside the Dice kernel. Here the cap defaults to
-    * `None` (exhaustive); the dedup entry points ([[minhashLsh]],
-    * [[simhash]], [[embeddingNearDup]]) default it ON at m = 64 —
-    * pass `starFanout = None` there to restore exhaustive pairing.
-    * Within one bucket every pair is emitted exactly once by BOTH the
-    * tiling and the star path (anchor-anchor pairs are emitted only
-    * from the smaller anchor's row).
+    * per-left top-k inside the Dice kernel. A `pairBudget` above the
+    * largest bucket's triangle makes every bucket cold, i.e. pairing
+    * exhaustive. Within one bucket every pair is emitted exactly once
+    * (anchor-anchor pairs only from the smaller anchor's row).
     *
-    * The hot census is collected to the driver like the linkage path's
-    * (`Linkage.saltExploded`): hot buckets are few by construction —
-    * each carries ≥ √budget distinct rows.
+    * The star census is collected to the driver like the linkage
+    * path's hot keys (`Linkage.saltExploded`): star buckets are few by
+    * construction — each carries > √(2·pairBudget) rows.
     *
     * Pairs are NOT deduplicated across buckets — callers `.distinct()`.
     */
   def bucketPairs(bucketed: DataFrame, pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Option[Int] = None): DataFrame =
+      starFanout: Int = 64): DataFrame =
     bucketPairsWithTotal(bucketed, pairBudget, starFanout)._1
 
   /** Rows above which the bucket table is "large": joins over streams
@@ -117,30 +107,28 @@ object Dedup {
     * verification joins. */
   private[ops] def bucketPairsWithTotal(bucketed: DataFrame,
       pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Option[Int] = None): (DataFrame, Long) = {
+      starFanout: Int = 64): (DataFrame, Long) = {
     val spark = bucketed.sparkSession
     import spark.implicits._
     require(pairBudget >= 2, s"pairBudget must be >= 2, got $pairBudget")
-    starFanout.foreach(m => require(m >= 1, s"starFanout must be >= 1, got $m"))
+    val m = starFanout
+    require(m >= 1, s"starFanout must be >= 1, got $m")
     val base = bucketed.select(col("bucket").cast("long").as("bucket"),
       col("id").cast("long").as("id"))
     // one census action, TWO outputs: the per-bucket counts feed a tiny
     // second-level aggregate producing the grand-total row count (for
-    // the join-strategy choice below) and the hot rows as a filtered
-    // collect_list — no rollup/Expand (which would double every input
-    // row before the partial aggregation), no second pass. collect_list
-    // drops the nulls the `when` leaves for cold buckets, and the hot
-    // set is small by construction (each member holds ≥ √pairBudget
-    // distinct rows).
+    // the join-strategy choice below) and the star buckets as a
+    // filtered collect_list — no rollup/Expand (which would double
+    // every input row before the partial aggregation), no second pass.
+    // collect_list drops the nulls the `when` leaves for cold buckets.
     val censusRow = base.groupBy($"bucket").agg(count(lit(1)).as("n"))
       .agg(
         coalesce(sum($"n"), lit(0L)).as("total"),
-        collect_list(when($"n" * ($"n" - 1) / 2 > pairBudget,
-          struct($"bucket", $"n"))).as("hot"))
+        collect_list(when($"n" * ($"n" - 1) / 2 > pairBudget && $"n" > 2L * m + 1,
+          $"bucket")).as("star"))
       .head()
     val totalRows = censusRow.getLong(0)
-    val census = censusRow.getSeq[org.apache.spark.sql.Row](1)
-      .map(r => (r.getLong(0), r.getLong(1))).toArray
+    val starBuckets = censusRow.getSeq[Long](1)
     // Cold buckets: group each bucket's ids into ONE list and expand
     // the triangle with a codegen'd nested transform — a single
     // exchange (the aggregate), versus the previous equi-self-join's
@@ -150,9 +138,9 @@ object Dedup {
     // stretch) and set-identical: pairs are normalized (least,
     // greatest) with i<j enumeration, exactly the a.id < b.id join
     // output. Safe to group: this stream holds ONLY cold buckets, so a
-    // list row is ≤ ~2·√pairBudget ids (~32 KB at the default budget) —
-    // the skewed giants that make collect_list dangerous were already
-    // routed to the tiling/star paths by the census above.
+    // list row is ≤ max(√(2·pairBudget) + 1, 2m+1) ids (~23 KB at the
+    // defaults) — the skewed giants that make collect_list dangerous
+    // were already routed to the star path by the census above.
     def coldPairs(d: DataFrame): DataFrame =
       d.groupBy($"bucket").agg(collect_list($"id").as("ids"))
         .where(size($"ids") >= 2)
@@ -165,128 +153,65 @@ object Dedup {
         // strict inequality like the join's a.id < b.id: duplicate
         // (bucket, id) rows must not yield self-pairs
         .where(col("id0") =!= col("id1"))
-    val side = math.max(1L, math.sqrt(pairBudget.toDouble).toLong)
-    // buckets whose full triangle beats the star stay exactly tiled;
-    // beyond n = 2m+1 the star is strictly smaller AND linear in n
-    val (starCensus, tileCensus) = starFanout match {
-      case Some(m) => census.partition { case (_, n) => n > 2L * m + 1 }
-      case None => (Array.empty[(Long, Long)], census)
-    }
-    val hot = tileCensus.map { case (b, n) =>
-      b -> math.max(1L, math.ceil(n.toDouble / side).toLong).toInt
-    }.toMap
-    val starSet = starCensus.map(_._1).toSet
-    if (hot.isEmpty && starSet.isEmpty) return (coldPairs(base), totalRows)
-    val hotB = spark.sparkContext.broadcast(hot)
-    val excluded = hot.keys.toSeq ++ starSet.toSeq
-    val cold = coldPairs(base.where(!col("bucket").isInCollection(excluded)))
-    val starPairs: Option[DataFrame] = if (starSet.isEmpty) None else {
-      val m = starFanout.get
-      val starRows = base.where(col("bucket").isInCollection(starSet.toSeq))
-      // deterministic anchors: the m smallest (mix64(id ^ mix64(b)), id)
-      // per bucket. NOT a window — a window sort would concentrate the
-      // motivating 10^6-member hot bucket into one sort task, the exact
-      // skew this machinery exists to avoid. Instead: per-partition
-      // bounded heaps (linear, no shuffle) → driver merge of
-      // ≤ m × #star-buckets candidates per partition — same collect
-      // shape as the hot census above.
-      def anchorKey(b: Long, id: Long): Long = Hashing.mix64(id ^ Hashing.mix64(b))
-      val partTop = starRows.as[(Long, Long)]
-        .mapPartitions { it =>
-          val heaps = scala.collection.mutable.HashMap
-            .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long)]]
-          it.foreach { case (b, id) =>
-            val k = (anchorKey(b, id), id)
-            val pq = heaps.getOrElseUpdate(b,
-              scala.collection.mutable.PriorityQueue.empty[(Long, Long)]) // max on top
-            if (pq.size < m) pq.enqueue(k)
-            else if (Ordering[(Long, Long)].lt(k, pq.head)) { pq.dequeue(); pq.enqueue(k) }
-          }
-          heaps.iterator.flatMap { case (b, pq) =>
-            pq.iterator.map { case (h, id) => (b, h, id) }
-          }
-        }
-      // second-level reduce BEFORE the driver: per-partition tops are
-      // m × #buckets × #partitions rows — merge to the global per-
-      // bucket top-m distributively so the collect is exactly
-      // m × #star-buckets (the census collect times m, never scaled by
-      // partition count)
-      val anchors: Map[Long, Array[Long]] = partTop
-        .groupByKey(_._1)
-        .mapGroups { (b, it) =>
-          val top = it.map(t => (t._2, t._3)).toArray.sorted.take(m).map(_._2).sorted
-          (b, top)
-        }
-        .collect()
-        .toMap
-      val anchorsB = spark.sparkContext.broadcast(anchors)
-      // each unordered pair exactly ONCE: a member row pairs with every
-      // anchor (members are not anchors), an ANCHOR row pairs only with
-      // strictly-larger anchors — without the guard every anchor-anchor
-      // pair would be emitted twice (once from each anchor's row),
-      // which embeddingNearDup's no-distinct contract would surface as
-      // duplicate output rows
-      Some(starRows.as[(Long, Long)]
-        .mapPartitions { it =>
-          val a = anchorsB.value
-          it.flatMap { case (b, id) =>
-            val as = a(b)
-            val isAnchor = java.util.Arrays.binarySearch(as, id) >= 0
-            as.iterator
-              .filter(x => if (isAnchor) x > id else x != id)
-              .map(x => (math.min(x, id), math.max(x, id)))
-          }
-        }
-        .toDF("id0", "id1"))
-    }
-    val tilePairs: Option[DataFrame] = if (hot.isEmpty) None else Some(
-      base.where(col("bucket").isInCollection(hot.keys.toSeq))
-      .as[(Long, Long)]
+    if (starBuckets.isEmpty) return (coldPairs(base), totalRows)
+    val cold = coldPairs(base.where(!col("bucket").isInCollection(starBuckets)))
+    val starRows = base.where(col("bucket").isInCollection(starBuckets))
+    // deterministic anchors: the m smallest (mix64(id ^ mix64(b)), id)
+    // per bucket. NOT a window — a window sort would concentrate the
+    // motivating 10^6-member hot bucket into one sort task, the exact
+    // skew this machinery exists to avoid. Instead: per-partition
+    // bounded heaps (linear, no shuffle) → driver merge of
+    // ≤ m × #star-buckets candidates per partition — same collect
+    // shape as the census above.
+    def anchorKey(b: Long, id: Long): Long = Hashing.mix64(id ^ Hashing.mix64(b))
+    val partTop = starRows.as[(Long, Long)]
       .mapPartitions { it =>
-        val h = hotB.value
+        val heaps = scala.collection.mutable.HashMap
+          .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long)]]
+        it.foreach { case (b, id) =>
+          val k = (anchorKey(b, id), id)
+          val pq = heaps.getOrElseUpdate(b,
+            scala.collection.mutable.PriorityQueue.empty[(Long, Long)]) // max on top
+          if (pq.size < m) pq.enqueue(k)
+          else if (Ordering[(Long, Long)].lt(k, pq.head)) { pq.dequeue(); pq.enqueue(k) }
+        }
+        heaps.iterator.flatMap { case (b, pq) =>
+          pq.iterator.map { case (h, id) => (b, h, id) }
+        }
+      }
+    // second-level reduce BEFORE the driver: per-partition tops are
+    // m × #buckets × #partitions rows — merge to the global per-
+    // bucket top-m distributively so the collect is exactly
+    // m × #star-buckets (the census collect times m, never scaled by
+    // partition count)
+    val anchors: Map[Long, Array[Long]] = partTop
+      .groupByKey(_._1)
+      .mapGroups { (b, it) =>
+        val top = it.map(t => (t._2, t._3)).toArray.sorted.take(m).map(_._2).sorted
+        (b, top)
+      }
+      .collect()
+      .toMap
+    val anchorsB = spark.sparkContext.broadcast(anchors)
+    // each unordered pair exactly ONCE: a member row pairs with every
+    // anchor (members are not anchors), an ANCHOR row pairs only with
+    // strictly-larger anchors — without the guard every anchor-anchor
+    // pair would be emitted twice (once from each anchor's row),
+    // which embeddingNearDup's no-distinct contract would surface as
+    // duplicate output rows
+    val starPairs = starRows.as[(Long, Long)]
+      .mapPartitions { it =>
+        val a = anchorsB.value
         it.flatMap { case (b, id) =>
-          val s = h(b)
-          val own = java.lang.Math
-            .floorMod(Hashing.mix64(id ^ Hashing.mix64(b)), s.toLong).toInt
-          (0 until s).iterator.map { j =>
-            val lo = math.min(own, j); val hi = math.max(own, j)
-            // Long cell id: lo*s+hi overflows Int once s > ~46k (a
-            // single bucket of ~9e7 rows at the default budget)
-            (b, lo.toLong * s + hi, if (own == lo) 0 else 1, id)
-          }
+          val as = a(b)
+          val isAnchor = java.util.Arrays.binarySearch(as, id) >= 0
+          as.iterator
+            .filter(x => if (isAnchor) x > id else x != id)
+            .map(x => (math.min(x, id), math.max(x, id)))
         }
       }
-      .groupByKey { case (b, cell, _, _) => (b, cell) }
-      .flatMapGroups { (key, rs) =>
-        // diagonal-ness comes from the CELL ID (lo == hi ⇔ cell is a
-        // multiple of s+1), never from "one side empty": an off-
-        // diagonal cell whose hi slice got no rows must emit NOTHING —
-        // its lo rows' within-slice pairs belong to the diagonal cell.
-        val (b, cell) = key
-        val s = hotB.value(b)
-        val diagonal = cell % (s + 1L) == 0L && cell / (s + 1L) < s
-        val lo = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val hi = scala.collection.mutable.ArrayBuffer.empty[Long]
-        rs.foreach { case (_, _, t, id) => if (t == 0) lo += id else hi += id }
-        if (diagonal) {
-          // all unordered pairs within the slice (tags are all 0 here);
-          // strictly a(i) < a(j) — should duplicate (bucket, id) rows
-          // ever reach this path (a 64-bit band-key collision), the
-          // skip keeps it self-pair-free like the cold path's a.id < b.id
-          val a = lo.toArray
-          java.util.Arrays.sort(a)
-          a.indices.iterator.flatMap(i =>
-            (i + 1 until a.length).iterator
-              .filter(j => a(j) != a(i)).map(j => (a(i), a(j))))
-        } else {
-          // off-diagonal cell: pairs BETWEEN the two slices only (the
-          // within-slice pairs belong to each slice's diagonal cell)
-          lo.iterator.flatMap(x => hi.iterator.map(y =>
-            (math.min(x, y), math.max(x, y))))
-        }
-      }
-      .toDF("id0", "id1"))
-    ((Seq(cold) ++ tilePairs ++ starPairs).reduce(_ unionByName _), totalRows)
+      .toDF("id0", "id1")
+    (cold.unionByName(starPairs), totalRows)
   }
 
   /** Rebalance an under-partitioned input scan: the CPU-heavy typed
@@ -382,16 +307,18 @@ object Dedup {
     * `unpersist()` it when done.
     *
     * @param jaccardThreshold verified n-gram Jaccard to call a dup.
-    * @param pairBudget max unordered pairs per band cell before
-    *                   triangle tiling kicks in ([[bucketPairs]]).
-    * @param starFanout per-record candidate cap for hot buckets of
-    *                   DISTINCT near-identical texts (the exact
+    * @param pairBudget max unordered pairs a band bucket may emit as
+    *                   its full triangle; a bucket above it with more
+    *                   than 2·m+1 members takes the star path
+    *                   ([[bucketPairs]]). A budget above the largest
+    *                   bucket's triangle gives exhaustive pairing.
+    * @param starFanout m, the per-record candidate cap for hot buckets
+    *                   of DISTINCT near-identical texts (the exact
     *                   pre-collapse only absorbs byte-identical
-    *                   copies): buckets beyond 2·m+1 members emit
-    *                   anchor/star pairs (n·m total) instead of the
-    *                   full n²/2 triangle — see [[bucketPairs]] for
-    *                   the connectivity-preserving recall semantics.
-    *                   `None` restores exhaustive pairing.
+    *                   copies): such a bucket emits anchor/star pairs
+    *                   (n·m total) instead of the full n²/2 triangle —
+    *                   see [[bucketPairs]] for the
+    *                   connectivity-preserving recall semantics.
     */
   def minhashLsh(
       docs: DataFrame,
@@ -402,7 +329,7 @@ object Dedup {
       jaccardThreshold: Double = 0.5,
       seed: Long = 0xded0bL,
       pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Option[Int] = Some(64),
+      starFanout: Int = 64,
       tap: Tap = noTap): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -420,7 +347,7 @@ object Dedup {
 
     // bounded same-band candidate pairs (canonical id0 < id1), deduped;
     // cached: the pair set feeds the verification joins — uncached, the
-    // census+tiling+distinct would run twice
+    // census+star+distinct would run twice
     // cached: the exploded band table is scanned by the census AND both
     // sides of the bucket self-join — uncached each scan re-explodes
     // (and re-deserializes the band arrays from) the signature cache
@@ -503,7 +430,7 @@ object Dedup {
       maxHamming: Int = 3,
       seed: Long = 0x51a54L,
       pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Option[Int] = Some(64),
+      starFanout: Int = 64,
       tap: Tap = noTap): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -626,7 +553,7 @@ object Dedup {
     * ([[bucketPairs]] — identical boilerplate embeddings share every
     * bucket, so the guard matters here too), verified by exact cosine.
     * `planes` must grow with corpus size (buckets ≈ 2^planes); the
-    * tiling bounds task size at any setting.
+    * star path bounds a hot bucket's pairs at any setting.
     *
     * Same eager-and-cached return contract and `starFanout` semantics
     * as [[minhashLsh]] (a template cluster of near-identical
@@ -639,7 +566,7 @@ object Dedup {
       planes: Int = 8,
       seed: Long = 0xe3bedL,
       pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Option[Int] = Some(64),
+      starFanout: Int = 64,
       tap: Tap = noTap): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -666,8 +593,9 @@ object Dedup {
     // tap("units") is pass-through by default; with a dump tap the
     // verification reads the SAME unit vectors the oracle sees
     val units = tap("units", vecs.select($"id", $"unit"))
-    // no .distinct(): each id has exactly ONE bucket, and the triangle
-    // tiling puts each unordered pair in exactly one cell
+    // no .distinct(): each id has exactly ONE bucket, and bucketPairs
+    // emits each unordered pair of a bucket exactly once, on the cold
+    // and the star path alike
     val cand = tap("cands", bucketPairs(vecs.select($"bucket", $"id"), pairBudget, starFanout))
     val u0 = units.select($"id".as("id0"), $"unit".as("u0"))
     val u1 = units.select($"id".as("id1"), $"unit".as("u1"))

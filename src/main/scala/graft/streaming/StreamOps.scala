@@ -122,10 +122,11 @@ object StreamOps {
     * beyond the retained sample (a doc re-arriving, or reaching one
     * bucket via several colliding bands, counts each time), not
     * distinct documents — counting distinct docs would need unbounded
-    * per-bucket id state, the exact thing the cap exists to avoid. The batch path's exact hot-bucket
-    * triangle tiling has no bounded-state streaming equivalent; the
-    * retained-sample semantics is the honest streaming trade and is
-    * documented here rather than hidden.
+    * per-bucket id state, the exact thing the cap exists to avoid. The
+    * batch path's hot-bucket star pairing needs each bucket's
+    * deterministic anchors, which a stream cannot know until the bucket
+    * is complete; the retained-sample semantics is the honest streaming
+    * trade and is documented here rather than hidden.
     *
     * Same-key duplicates: one doc can land in a bucket via two bands
     * whose keys collide; pairs may then be emitted once per shared

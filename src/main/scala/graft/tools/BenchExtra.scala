@@ -14,7 +14,8 @@ import graft.SparkEntry
   *   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_CPUS     local[N] cores (default 32)
   *   GRAFT_BENCH_QUERIES  comma-separated query-name filter (default all)
-  *   GRAFT_BENCH_REPS     samples per query, min reported (default 1)
+  *   GRAFT_BENCH_REPS     samples per query; min, median and max
+  *                        reported, counts from the min (default 1)
   *   GRAFT_BENCH_PLANS    when set, a dir to write <query>.txt formatted
   *                        plans of the RETURNED frame (eager operators
   *                        return their cached result — the interesting
@@ -64,7 +65,7 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "1").toInt
+    val reps = math.max(1, sys.env.getOrElse("GRAFT_BENCH_REPS", "1").toInt)
     val planDir = sys.env.get("GRAFT_BENCH_PLANS")
     val filter = sys.env.get("GRAFT_BENCH_QUERIES").map(_.split(",").map(_.trim).toSet)
 
@@ -99,7 +100,7 @@ object BenchExtra {
       var best = Double.MaxValue
       var bestJobs = 0; var bestStages = 0; var bestTasks = 0
       var bestCanary = 0.0
-      for (_ <- 1 to reps) {
+      val secs = (1 to reps).map { _ =>
         reset(spark)
         val canary = hostCanaryMcps()
         val c = new Counts
@@ -115,7 +116,9 @@ object BenchExtra {
           best = sec; bestJobs = c.jobs.get; bestStages = c.stages.get
           bestTasks = c.tasks.get; bestCanary = canary
         }
-      }
+        sec
+      }.sorted
+      val median = (secs((reps - 1) / 2) + secs(reps / 2)) / 2
       planDir.foreach { pd =>
         try {
           reset(spark)
@@ -125,7 +128,8 @@ object BenchExtra {
           java.nio.file.Files.writeString(java.nio.file.Paths.get(pd, s"$name.txt"), p)
         } catch { case e: Throwable => System.err.println(s"[bench-extra] plan $name failed: $e") }
       }
-      println(f"$name%-26s ${best}%8.2f s  jobs=$bestJobs%-4d stages=$bestStages%-4d " +
+      println(f"$name%-26s ${best}%8.2f s  med=$median%.2f max=${secs.last}%.2f  " +
+        f"jobs=$bestJobs%-4d stages=$bestStages%-4d " +
         f"tasks=$bestTasks%-6d canary=$bestCanary%.0f")
       (name, best, bestJobs, bestStages, bestTasks)
     }

@@ -7,7 +7,7 @@ import graft.ops.Dedup
 /** Env-gated dedup-at-scale evidence (the dedup twin of the HUGE
   * linkage E2E): half a million near-duplicate web pages through the
   * full minhash-LSH pipeline — exact pre-collapse, banding,
-  * triangle-tiling/star guards, inverted-index Jaccard verify, CC,
+  * the hot-bucket star guard, inverted-index Jaccard verify, CC,
   * member re-expansion — scored against the planted entity labels with
   * the distributed pairwise evaluator (no pair materialization).
   *

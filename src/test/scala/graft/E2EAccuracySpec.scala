@@ -45,7 +45,7 @@ class E2EAccuracySpec extends AnyFunSuite {
 
     val params = LinkageParams(blocking = MinhashBlocking(), threshold = 0.8, k = Some(5))
     val pairs = Linkage.candidatePairs(pages, params, col("dsetId")).cache()
-    val mapping = Linkage.greedyClusters(pairs) // exact greedy, like the reference
+    val mapping = SparkTestBase.greedyOracle(pairs) // exact greedy, like the reference
 
     // ground truth: recId -> entityId
     val entityOf = pages

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.core.BitVector
+import graft.core.{BitVector, Hashing}
 import graft.ops._
 import graft.sim.{ClkRow, DiceKernel, SmcKernel}
 
@@ -192,7 +192,7 @@ class OpsSpec extends AnyFunSuite {
       (i.toLong, proto.map(x => x + 0.0005f * rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val out = Dedup.embeddingNearDup(df, "vec_id", "embedding",
-      cosineThreshold = 0.99, pairBudget = 50, starFanout = Some(3))
+      cosineThreshold = 0.99, pairBudget = 50, starFanout = 3)
     val rows = out.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.length == rows.toSet.size,
       s"${rows.length - rows.toSet.size} duplicate near-dup pair rows")
@@ -252,34 +252,11 @@ class OpsSpec extends AnyFunSuite {
     assert(rows.filter(r => Set(10L, 11L, 12L).contains(r._1)).map(_._2).toSet.size == 1)
   }
 
-  test("bucketPairs: hot-bucket triangle tiling is exact and bounded") {
-    // one hot bucket (300 rows => 44850 pairs >> budget 100) + one cold
-    val n = 300
-    val rows = (0 until n).map(i => (7L, i.toLong)) ++ Seq((8L, 1000L), (8L, 1001L))
-    val got = Dedup.bucketPairs(rows.toDF("bucket", "id"), pairBudget = 100)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // every unordered pair exactly once (tiling partitions, never dups)
-    assert(got.length == got.toSet.size, "duplicate pairs across cells")
-    val want = (for { i <- 0 until n; j <- i + 1 until n }
-      yield (i.toLong, j.toLong)).toSet + ((1000L, 1001L))
-    assert(got.toSet == want)
-
-    // regression: s > n forces EMPTY slices; an off-diagonal cell with
-    // an empty hi slice must emit nothing (not duplicate the lo slice's
-    // within pairs — diagonal-ness is decided by cell id, not emptiness)
-    val few = (0 until 20).map(i => (9L, i.toLong)).toDF("bucket", "id")
-    val got2 = Dedup.bucketPairs(few, pairBudget = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got2.length == got2.toSet.size, "duplicate pairs with empty slices")
-    assert(got2.toSet ==
-      (for { i <- 0 until 20; j <- i + 1 until 20 } yield (i.toLong, j.toLong)).toSet)
-  }
-
   test("bucketPairs starFanout: giant distinct hot bucket emits O(n·m) pairs, stays connected") {
     val n = 2000
     val m = 8
     val rows = (0 until n).map(i => (7L, i.toLong)).toDF("bucket", "id")
-    val star = Dedup.bucketPairs(rows, pairBudget = 1000, starFanout = Some(m))
+    val star = Dedup.bucketPairs(rows, pairBudget = 1000, starFanout = m)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // volume: n·m anchor pairs, nowhere near the n·(n−1)/2 triangle
     assert(star.length <= n.toLong * m, s"pair volume ${star.length} exceeds n*m=${n * m}")
@@ -298,12 +275,71 @@ class OpsSpec extends AnyFunSuite {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     assert((0 until n).map(find).toSet.size == 1, "star pairs must keep the bucket connected")
-    // a bucket at exactly the star break-even (n <= 2m+1) stays exact
+    // a bucket over the budget but at the star break-even (n <= 2m+1)
+    // goes cold and emits its full triangle
     val small = (0 until 2 * m + 1).map(i => (9L, i.toLong)).toDF("bucket", "id")
-    val exact = Dedup.bucketPairs(small, pairBudget = 10, starFanout = Some(m))
+    val exact = Dedup.bucketPairs(small, pairBudget = 10, starFanout = m)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact == (for { i <- 0 until 2 * m + 1; j <- i + 1 until 2 * m + 1 }
-      yield (i.toLong, j.toLong)).toSet, "sub-threshold hot buckets must stay exactly tiled")
+      yield (i.toLong, j.toLong)).toSet, "buckets with n <= 2m+1 must go cold and stay exact")
+  }
+
+  test("property: bucketPairs == driver model (cold triangle / star anchors) " +
+    "on random distinct (bucket, id) tables around n = 2m+1 and the budget") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // most sizes sit around n = 2m+1, and most budgets equal one
+    // bucket's triangle n·(n−1)/2 or one less, so both sides of both
+    // boundaries come up in a few cases
+    val cases = for {
+      m <- Gen.choose(1, 6)
+      nBuckets <- Gen.choose(1, 6)
+      buckets <- Gen.listOfN(nBuckets, for {
+        b <- Gen.choose(Long.MinValue, Long.MaxValue)
+        n <- Gen.frequency(1 -> Gen.choose(0, 60), 2 -> Gen.choose(2 * m - 1, 2 * m + 3))
+        ids <- Gen.pick(n, 0L until 200L)
+      } yield ids.map(id => (b, id)))
+      budget <- Gen.frequency(1 -> Gen.choose(2L, 300L), 2 -> (for {
+        n <- Gen.oneOf(buckets.map(_.size.toLong))
+        d <- Gen.choose(0L, 1L)
+      } yield math.max(2L, n * (n - 1) / 2 - d)))
+    } yield (buckets.flatten.distinct, m, budget)
+    // the documented rule, computed on the driver: each bucket's pairs,
+    // and whether it takes the star path
+    def model(rows: Seq[(Long, Long)], m: Int, budget: Long): Map[Long, (Seq[(Long, Long)], Boolean)] =
+      rows.groupBy(_._1).map { case (b, rs) =>
+        val ids = rs.map(_._2).sorted
+        val n = ids.size.toLong
+        val star = n * (n - 1) / 2 > budget && n > 2L * m + 1
+        val pairs =
+          if (!star) for { i <- ids.indices; j <- i + 1 until ids.length } yield (ids(i), ids(j))
+          else {
+            val anchors = ids.sortBy(id => (Hashing.mix64(id ^ Hashing.mix64(b)), id)).take(m).sorted
+            val members = ids.filterNot(anchors.contains)
+            members.flatMap(id => anchors.map(a => (math.min(a, id), math.max(a, id)))) ++
+              (for { i <- anchors.indices; j <- i + 1 until anchors.length }
+                yield (anchors(i), anchors(j)))
+          }
+        b -> (pairs, star)
+      }
+    def connected(ids: Seq[Long], pairs: Seq[(Long, Long)]): Boolean = {
+      val parent = scala.collection.mutable.Map(ids.map(id => id -> id): _*)
+      def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
+      pairs.foreach { case (a, b) => parent(find(a)) = find(b) }
+      ids.map(find).distinct.size == 1
+    }
+    val prop = Prop.forAllNoShrink(cases) { case (rows, m, budget) =>
+      val got = Dedup.bucketPairs(rows.toDF("bucket", "id"), pairBudget = budget, starFanout = m)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val want = model(rows, m, budget)
+      got.sorted == want.values.flatMap(_._1).toSeq.sorted &&
+        got.forall { case (a, b) => a < b } &&
+        want.forall { case (b, (pairs, star)) =>
+          !star || connected(rows.filter(_._1 == b).map(_._2), pairs)
+        }
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(10)
+      .withWorkers(1).withInitialSeed(29L), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
   test("minhashLsh starFanout bounds verified-pair volume on a giant distinct " +
@@ -320,9 +356,11 @@ class OpsSpec extends AnyFunSuite {
     val fullTap: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
       (stage, df) => { if (stage == "verified") fullPairs = df.count(); df }
     val capped = Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.5,
-      pairBudget = 200, starFanout = Some(4), tap = countTap)
+      pairBudget = 200, starFanout = 4, tap = countTap)
+    // a budget above every bucket's triangle: nothing is hot, pairing
+    // is exhaustive
     val uncapped = Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.5,
-      pairBudget = 200, starFanout = None, tap = fullTap)
+      pairBudget = Long.MaxValue / 4, tap = fullTap)
     assert(fullPairs == 600L * 599 / 2, s"unguarded run should verify every pair, got $fullPairs")
     // capped: per record at most bands × m distinct anchor partners
     assert(cappedPairs <= 600L * 32 * 4,
@@ -337,12 +375,13 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("minhash LSH survives a planted hot cluster: exact copies collapse, " +
-    "near-identical distinct docs are triangle-tiled") {
+    "near-identical distinct docs take the star path") {
     val boiler = "terms of service apply to all content on this website " +
       "please review our policy before continuing to browse these pages"
     // 300 exact copies of doc 1 (pre-collapse: ONE representative enters
-    // LSH) + 200 distinct near-identical docs (hot bands: tiling bounds
-    // the per-task pair count at pairBudget=50)
+    // LSH) + 200 distinct near-identical docs: at pairBudget=50 and the
+    // default m = 64, a band bucket holding more than 2m+1 = 129 of the
+    // 201 representatives takes the star path
     val copies = (1 to 300).map(i => (i.toLong, boiler))
     val near = (1 to 200).map(i => (1000L + i, boiler + s" tail$i"))
     val df = (copies ++ near).toDF("id", "text")
@@ -361,7 +400,7 @@ class OpsSpec extends AnyFunSuite {
       pairBudget = Long.MaxValue / 4)
     assert(res2.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
       == res.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq,
-      "tiling changed results")
+      "star pairing changed results")
   }
 
   test("ngram jaccard df-cap: stop-grams leave the sets; generous cap = uncapped") {

@@ -122,7 +122,7 @@ class PipelineSpec extends AnyFunSuite {
     ccDf.unpersist()
     val ccPairs = Greedy.groupPairs(
       ccClusters.groupBy(_._2).values.map(_.map(_._1).toSeq).filter(_.size > 1).toSeq)
-    val greedyPairs = Greedy.groupPairs(Linkage.greedyClusters(pairs))
+    val greedyPairs = Greedy.groupPairs(SparkTestBase.greedyOracle(pairs))
     val f1 = Greedy.pairwiseF1(ccPairs, greedyPairs)
     assert(greedyPairs.nonEmpty)
     assert(f1 >= 0.99, s"pairwise F1 vs greedy oracle = $f1")

@@ -189,7 +189,7 @@ class RunPipelineSpec extends AnyFunSuite {
     RunPipeline.run(spark, cfg)
     val pairs = spark.read.parquet(s"$base/pairs_three")
     assert(pairs.select(col("dset0"), col("dset1")).distinct().count() == 3L)
-    val want = Linkage.greedyClusters(pairs)
+    val want = SparkTestBase.greedyOracle(pairs)
       .map(_.map(r => (r.dset, r.rec)).toSet).toSet
     assert(clusterSet(spark.read.parquet(s"$base/out_three")) == want)
     assert(want.exists(_.size > 2), "no multiparty group — weak test input")

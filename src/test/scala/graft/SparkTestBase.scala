@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.solve.{Candidate, Greedy, Rec}
 
 object SparkTestBase {
   lazy val spark: SparkSession = {
@@ -38,4 +39,12 @@ object SparkTestBase {
       execs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The sequential greedy solve (the reference's `greedy_solve`) over
+    * a candidate-pair frame collected to the driver: the oracle the
+    * cluster specs compare distributed solvers against. */
+  def greedyOracle(pairs: DataFrame): Seq[Seq[Rec]] =
+    Greedy.greedySolve(pairs.select("sim", "dset0", "dset1", "rec0", "rec1").collect()
+      .map(r => Candidate(r.getDouble(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+      .toSeq)
 }
