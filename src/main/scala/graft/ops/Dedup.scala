@@ -89,25 +89,7 @@ object Dedup {
     * Pairs are NOT deduplicated across buckets — callers `.distinct()`.
     */
   def bucketPairs(bucketed: DataFrame, pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Int = 64): DataFrame =
-    bucketPairsWithTotal(bucketed, pairBudget, starFanout)._1
-
-  /** Rows above which the bucket table is "large": joins over streams
-    * of this size stop being broadcast-able, so sort-based strategies
-    * (and their sorts) appear; callers use the flag to place a
-    * SHUFFLE_HASH hint on their verification joins only in that regime
-    * — below it AQE's runtime broadcast is strictly better and the hint
-    * would force a worse plan. ~500k (bucket, id) rows ≈ the 10 MB
-    * auto-broadcast threshold at ~20 B/row. */
-  private[ops] val LargeBucketTableRows = 500000L
-
-  /** As [[bucketPairs]], also returning the bucket table's TOTAL row
-    * count (measured inside the single census action — no extra pass).
-    * Callers use it for size-aware join strategy on their own
-    * verification joins. */
-  private[ops] def bucketPairsWithTotal(bucketed: DataFrame,
-      pairBudget: Long = 4L * 1000 * 1000,
-      starFanout: Int = 64): (DataFrame, Long) = {
+      starFanout: Int = 64): DataFrame = {
     val spark = bucketed.sparkSession
     import spark.implicits._
     require(pairBudget >= 2, s"pairBudget must be >= 2, got $pairBudget")
@@ -115,20 +97,13 @@ object Dedup {
     require(m >= 1, s"starFanout must be >= 1, got $m")
     val base = bucketed.select(col("bucket").cast("long").as("bucket"),
       col("id").cast("long").as("id"))
-    // one census action, TWO outputs: the per-bucket counts feed a tiny
-    // second-level aggregate producing the grand-total row count (for
-    // the join-strategy choice below) and the star buckets as a
-    // filtered collect_list — no rollup/Expand (which would double
-    // every input row before the partial aggregation), no second pass.
-    // collect_list drops the nulls the `when` leaves for cold buckets.
-    val censusRow = base.groupBy($"bucket").agg(count(lit(1)).as("n"))
-      .agg(
-        coalesce(sum($"n"), lit(0L)).as("total"),
-        collect_list(when($"n" * ($"n" - 1) / 2 > pairBudget && $"n" > 2L * m + 1,
-          $"bucket")).as("star"))
-      .head()
-    val totalRows = censusRow.getLong(0)
-    val starBuckets = censusRow.getSeq[Long](1)
+    // one census action: per-bucket counts, then the star buckets as a
+    // filtered collect_list (it drops the nulls the `when` leaves for
+    // cold buckets), so only star bucket ids reach the driver
+    val starBuckets = base.groupBy($"bucket").agg(count(lit(1)).as("n"))
+      .agg(collect_list(when($"n" * ($"n" - 1) / 2 > pairBudget && $"n" > 2L * m + 1,
+        $"bucket")))
+      .head().getSeq[Long](0)
     // Cold buckets: group each bucket's ids into ONE list and expand
     // the triangle with a codegen'd nested transform — a single
     // exchange (the aggregate), versus the previous equi-self-join's
@@ -153,7 +128,7 @@ object Dedup {
         // strict inequality like the join's a.id < b.id: duplicate
         // (bucket, id) rows must not yield self-pairs
         .where(col("id0") =!= col("id1"))
-    if (starBuckets.isEmpty) return (coldPairs(base), totalRows)
+    if (starBuckets.isEmpty) return coldPairs(base)
     val cold = coldPairs(base.where(!col("bucket").isInCollection(starBuckets)))
     val starRows = base.where(col("bucket").isInCollection(starBuckets))
     // deterministic anchors: the m smallest (mix64(id ^ mix64(b)), id)
@@ -211,7 +186,7 @@ object Dedup {
         }
       }
       .toDF("id0", "id1")
-    (cold.unionByName(starPairs), totalRows)
+    cold.unionByName(starPairs)
   }
 
   /** Rebalance an under-partitioned input scan: the CPU-heavy typed
@@ -295,16 +270,35 @@ object Dedup {
       .select("id", "clusterId", "keeper")
   }
 
+  /** Runs `body` with a `cache` function that caches a frame and
+    * registers it; every registered frame is unpersisted when `body`
+    * returns OR throws, so a failed action inside the operator (the
+    * census, the star-anchor collect, a materialize, CC) leaves nothing
+    * pinned in the session. A frame `body` returns cached is its own
+    * `.cache()`, not registered. */
+  private def releasing[A](body: (DataFrame => DataFrame) => A): A = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => cached += df.cache(); df }
+    finally cached.foreach(_.unpersist())
+  }
+
   /** MinHash + LSH near-dup clusters:
     * exact pre-collapse → shingle → minhash signature → band keys →
-    * bounded same-band pairs → exact-Jaccard verification → CC →
-    * member re-expansion → (id, clusterId, keeper).
+    * bounded same-band pairs → pair side (pairs + g0 gram arrays,
+    * cached and counted) → exact-Jaccard verification against the g1
+    * gram arrays → CC → member re-expansion → (id, clusterId, keeper).
     *
     * The returned frame is CACHED and already materialized (the
     * operator evaluates eagerly so its internal caches — rep collapse,
-    * signatures, candidate pairs — can be unpersisted before
-    * returning instead of leaking across a session); callers
-    * `unpersist()` it when done.
+    * signatures, band table, pair side — can be unpersisted before
+    * returning instead of leaking across a session, also when an
+    * action fails); callers `unpersist()` it when done. Four root
+    * actions: the star census, the pair-side count, CC's gate and the
+    * result's materialize. The pair-side count is what lets the planner
+    * size the g1 attach by its real bytes: a pair side within
+    * `spark.sql.autoBroadcastJoinThreshold` is broadcast and the
+    * signatures stream without an exchange; a larger one is joined
+    * SHUFFLE_HASH.
     *
     * @param jaccardThreshold verified n-gram Jaccard to call a dup.
     * @param pairBudget max unordered pairs a band bucket may emit as
@@ -330,62 +324,63 @@ object Dedup {
       seed: Long = 0xded0bL,
       pairBudget: Long = 4L * 1000 * 1000,
       starFanout: Int = 64,
-      tap: Tap = noTap): DataFrame = {
+      tap: Tap = noTap): DataFrame = releasing { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val withRep = tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)).cache()
+    val withRep = cache(tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)))
     // one pass per representative: rep → (band keys, distinct gram set)
-    val sigs = withRep.where($"id" === $"rep").select($"id", $"text")
+    val sigs = cache(withRep.where($"id" === $"rep").select($"id", $"text")
       .as[(Long, String)]
       .map { case (id, text) =>
         val grams = ClkEncoder.wordNgramHashes(text, ngramN, seed).distinct
         (id, Blocking.minhashBandKeys(grams, params), grams)
       }
-      .toDF("id", "bands", "grams")
-      .cache()
+      .toDF("id", "bands", "grams"))
 
-    // bounded same-band candidate pairs (canonical id0 < id1), deduped;
-    // cached: the pair set feeds the verification joins — uncached, the
-    // census+star+distinct would run twice
-    // cached: the exploded band table is scanned by the census AND both
-    // sides of the bucket self-join — uncached each scan re-explodes
-    // (and re-deserializes the band arrays from) the signature cache
-    val banded = sigs.select(explode($"bands").as("bucket"), $"id").cache()
-    val (pairs0, bandedRows) = bucketPairsWithTotal(banded, pairBudget, starFanout)
-    val pairs = pairs0.distinct().cache()
+    // cached: the exploded band table is scanned by the census AND the
+    // pair generation — uncached each scan re-explodes (and
+    // re-deserializes the band arrays from) the signature cache
+    val banded = cache(sigs.select(explode($"bands").as("bucket"), $"id"))
 
     // verify with exact n-gram Jaccard by attaching the two (distinct)
     // gram ARRAYS to each candidate pair and intersecting them in one
     // codegen'd expression. This replaced a gram-inverted-index join
-    // ((pair, gram) scalar rows → two equi-joins → count per pair):
-    // measured on the 50k-doc scale corpus the index path cost ~5-8 s
-    // (two shuffles of Σ_docs |grams| ≈ 5.7M scalar rows plus a
-    // Σ_pairs |grams| intermediate, then a pair-keyed aggregate) vs
-    // <1 s for the array path (two joins keyed on the ~n·m-bounded pair
-    // set, zero extra shuffles of gram data, O(|g0|+|g1|) per pair) —
-    // guide §2.3/§2.4: fewer exchanges, fewer bytes. Shuffle payload is
-    // Σ_pairs(|g0|+|g1|) gram hashes; the star-fanout cap bounds pairs
-    // at n·m, so the payload is ≤ 2·m·Σ_docs |grams| — same order as
-    // the scalar-row stream the index path shuffled, without its three
-    // extra exchanges. Intersection counts are identical (gram sets are
-    // distinct per doc on both paths), so the Jaccard doubles — and the
-    // verified edge set — are bit-identical.
-    // The first attach joins the (small) pair set against the
-    // signatures — the planner broadcasts the pairs and streams the
-    // signature cache, zero exchanges. The second attach carries the
-    // g0 arrays on its left: on a LARGE corpus that side is too big to
-    // broadcast and unhinted it planned as sort-merge, sorting the
-    // ARRAY payloads on both sides — SHUFFLE_HASH keeps the two
-    // exchanges but drops both sorts (guide §3.1; hash build per
-    // partition is the bounded signature slice, never a skewed key's
-    // whole payload). On a small corpus AQE's runtime broadcast is
-    // strictly better, so the hint is size-gated like bucketPairs'.
+    // ((pair, gram) scalar rows → two equi-joins → count per pair),
+    // which cost ~5-8 s on the 50k-doc scale corpus against <1 s here.
+    // Intersection counts are identical (gram sets are distinct per doc
+    // on both paths), so the Jaccard doubles — and the verified edge
+    // set — are bit-identical.
+    //
+    // Where the bytes go (dedup-pages, 12k docs, seed 1): with both
+    // gram attaches planned off estimates the run shuffled 26.5 MB, of
+    // which 16.07 MB was the g1 attach — AQE exchanged all 11 573 gram
+    // arrays (10.57 MB) and the pair+g0 side (5.50 MB) before turning
+    // the join into a broadcast of that side; the rest is the census
+    // (3.03 MB), the cold bucket lists (6.63 MB) and the distinct
+    // (0.43 MB). So the pair side is built first: the distinct pairs
+    // join the signature cache for g0 (the pairs broadcast, the
+    // signatures stream, no exchange), and one count() materializes it.
+    // Its cache then carries its real size (5.5 MB there; the gram
+    // table is 14.4 MB), and the g1 attach is decided from it:
+    //  - within `spark.sql.autoBroadcastJoinThreshold`: the planner
+    //    broadcasts the pair side and streams the signatures, no
+    //    exchange (10.4 MB of shuffle per dedup-pages run in all);
+    //  - over it (the 50k-doc scale corpus; or a threshold of -1):
+    //    SHUFFLE_HASH on the gram side. Unhinted that join planned as
+    //    sort-merge, sorting the ARRAY payloads on both sides; the hint
+    //    keeps the two exchanges and drops both sorts (the hash build
+    //    per partition is a bounded signature slice, never a skewed
+    //    key's whole payload).
     val gramsById = sigs.select($"id", $"grams")
+    val pairSide = cache(bucketPairs(banded, pairBudget, starFanout).distinct()
+      .join(gramsById.select($"id".as("id0"), $"grams".as("g0")), "id0"))
+    pairSide.count()
     val g1Side = gramsById.select($"id".as("id1"), $"grams".as("g1"))
-    val verified = pairs
-      .join(gramsById.select($"id".as("id0"), $"grams".as("g0")), "id0")
-      .join(if (bandedRows >= LargeBucketTableRows) g1Side.hint("SHUFFLE_HASH") else g1Side, "id1")
+    val broadcastable = pairSide.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    val verified = pairSide
+      .join(if (broadcastable) g1Side else g1Side.hint("SHUFFLE_HASH"), "id1")
       .withColumn("inter", size(array_intersect($"g0", $"g1")).cast("long"))
       .withColumn("n0", size($"g0").cast("long"))
       .withColumn("n1", size($"g1").cast("long"))
@@ -399,20 +394,14 @@ object Dedup {
       .select($"id0", $"id1")
 
     // CC is eager (iterative jobs / driver finish), so by the time it
-    // returns, sigs and pairs are fully consumed; the result is then
-    // cached + materialized so withRep can be released too — nothing
-    // internal outlives the call (see the scaladoc contract).
-    // release in finally: a failed materialization (executor OOM, task
-    // abort) must not leave the internal caches pinned in the session
-    try {
-      val comps = ConnectedComponents.run(
-        tap("verified", verified).select($"id0".as("src"), $"id1".as("dst")))
-      val out = expandReps(withRep, comps).cache()
-      out.count()
-      out
-    } finally {
-      withRep.unpersist(); sigs.unpersist(); pairs.unpersist(); banded.unpersist()
-    }
+    // returns, the signatures and the pair side are fully consumed; the
+    // result is then cached + materialized so withRep can be released
+    // too — nothing internal outlives the call
+    val comps = ConnectedComponents.run(
+      tap("verified", verified).select($"id0".as("src"), $"id1".as("dst")))
+    val out = expandReps(withRep, comps).cache()
+    out.count()
+    out
   }
 
   /** SimHash near-dup: exact pre-collapse → 64-bit simhash, banded
@@ -432,41 +421,38 @@ object Dedup {
       pairBudget: Long = 4L * 1000 * 1000,
       starFanout: Int = 64,
       tap: Tap = noTap): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for hamming <= 3")
+    releasing { cache =>
+      val spark = docs.sparkSession
+      import spark.implicits._
 
-    val withRep = tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)).cache()
-    val sigs = withRep.where($"id" === $"rep").select($"id", $"text")
-      .as[(Long, String)]
-      .map { case (id, text) => (id, TextOps.simhash(text, seed)) }
-      .toDF("id", "sig")
-      .cache()
+      val withRep = cache(tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)))
+      val sigs = cache(withRep.where($"id" === $"rep").select($"id", $"text")
+        .as[(Long, String)]
+        .map { case (id, text) => (id, TextOps.simhash(text, seed)) }
+        .toDF("id", "sig"))
 
-    // bucket = (chunk index, 16-bit chunk value) packed into one long;
-    // cached for the census + self-join scans like minhashLsh's banded
-    val chunked = sigs.select(
-      explode(array((0 until 4).map(c =>
-        (shiftright($"sig", c * 16).bitwiseAND(0xffffL) + lit(c.toLong << 16)).as(s"k$c")): _*))
-        .as("bucket"),
-      $"id").cache()
-    val pairs = bucketPairs(chunked, pairBudget, starFanout).distinct().cache()
+      // bucket = (chunk index, 16-bit chunk value) packed into one long;
+      // cached for the census + pair-generation scans like minhashLsh's banded
+      val chunked = cache(sigs.select(
+        explode(array((0 until 4).map(c =>
+          (shiftright($"sig", c * 16).bitwiseAND(0xffffL) + lit(c.toLong << 16)).as(s"k$c")): _*))
+          .as("bucket"),
+        $"id"))
+      val pairs = cache(bucketPairs(chunked, pairBudget, starFanout).distinct())
 
-    val s0 = sigs.select($"id".as("id0"), $"sig".as("s0"))
-    val s1 = sigs.select($"id".as("id1"), $"sig".as("s1"))
-    val verified = pairs.join(s0, "id0").join(s1, "id1")
-      .withColumn("hamming", bit_count($"s0".bitwiseXOR($"s1")))
-      .where($"hamming" <= maxHamming)
-      .select($"id0", $"id1")
+      val s0 = sigs.select($"id".as("id0"), $"sig".as("s0"))
+      val s1 = sigs.select($"id".as("id1"), $"sig".as("s1"))
+      val verified = pairs.join(s0, "id0").join(s1, "id1")
+        .withColumn("hamming", bit_count($"s0".bitwiseXOR($"s1")))
+        .where($"hamming" <= maxHamming)
+        .select($"id0", $"id1")
 
-    try {
       val comps = ConnectedComponents.run(
         tap("verified", verified).select($"id0".as("src"), $"id1".as("dst")))
       val out = expandReps(withRep, comps).cache()
       out.count()
       out
-    } finally {
-      withRep.unpersist(); sigs.unpersist(); pairs.unpersist(); chunked.unpersist()
     }
   }
 
@@ -499,7 +485,7 @@ object Dedup {
       ngramN: Int = 3,
       threshold: Double = 0.5,
       seed: Long = 0x9a33L,
-      maxDf: Long = 100000L): DataFrame = {
+      maxDf: Long = 100000L): DataFrame = releasing { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
     // df-cap via a hash-aggregate census + broadcast anti-join — no
@@ -513,19 +499,17 @@ object Dedup {
     // NULL text → "" (empty gram set, no pairs) — see withTextRep
     // grams0 cached: the stop-gram census and the filtered-index cache
     // fill both scan it — uncached, the shingling flatMap over every
-    // text ran twice (released in the finally with the others)
-    val grams0 = rebalanced(docs).select(col(idCol).cast("long").as("id"),
+    // text ran twice
+    val grams0 = cache(rebalanced(docs).select(col(idCol).cast("long").as("id"),
         coalesce(col(textCol), lit("")).as("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
         ClkEncoder.wordNgramHashes(text, ngramN, seed).distinct.map(g => (id, g))
       }
-      .toDF("id", "gram")
-      .cache()
+      .toDF("id", "gram"))
     val stopGrams = grams0.groupBy($"gram").agg(count(lit(1)).as("df"))
       .where($"df" > maxDf).select($"gram")
-    val grams = grams0.join(broadcast(stopGrams), Seq("gram"), "left_anti")
-      .cache()
+    val grams = cache(grams0.join(broadcast(stopGrams), Seq("gram"), "left_anti"))
     val sizes = grams.groupBy($"id").agg(count(lit(1)).as("n"))
     // direct self-join count: every gram-sharing pair gets its
     // intersection size in one aggregation
@@ -533,19 +517,15 @@ object Dedup {
       .where($"a.id" < $"b.id")
       .groupBy($"a.id".as("id0"), $"b.id".as("id1"))
       .agg(count(lit(1)).as("inter"))
-    try {
-      val out = inter
-        .join(sizes.select($"id".as("id0"), $"n".as("n0")), "id0")
-        .join(sizes.select($"id".as("id1"), $"n".as("n1")), "id1")
-        .withColumn("jaccard", $"inter" / ($"n0" + $"n1" - $"inter"))
-        .where($"jaccard" >= threshold)
-        .select($"id0", $"id1", $"jaccard")
-        .cache()
-      out.count()
-      out
-    } finally {
-      grams.unpersist(); grams0.unpersist()
-    }
+    val out = inter
+      .join(sizes.select($"id".as("id0"), $"n".as("n0")), "id0")
+      .join(sizes.select($"id".as("id1"), $"n".as("n1")), "id1")
+      .withColumn("jaccard", $"inter" / ($"n0" + $"n1" - $"inter"))
+      .where($"jaccard" >= threshold)
+      .select($"id0", $"id1", $"jaccard")
+      .cache()
+    out.count()
+    out
   }
 
   /** Embedding-cosine near-dup PAIRS: normalized vectors, LSH-bucketed
@@ -567,7 +547,7 @@ object Dedup {
       seed: Long = 0xe3bedL,
       pairBudget: Long = 4L * 1000 * 1000,
       starFanout: Int = 64,
-      tap: Tap = noTap): DataFrame = {
+      tap: Tap = noTap): DataFrame = releasing { cache =>
     val spark = embeddings.sparkSession
     import spark.implicits._
     // a NULL embedding cannot pair with anything (and unlike NULL text
@@ -575,7 +555,7 @@ object Dedup {
     // would still land every null row in one artificial hot bucket):
     // exclude such rows, which yields the same pair set a zero vector
     // would (cosine 0 < any positive threshold) without the bucket skew
-    val vecs = rebalanced(embeddings)
+    val vecs = cache(rebalanced(embeddings)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .where(col("vec").isNotNull)
       .as[(Long, Seq[Float])]
@@ -588,8 +568,7 @@ object Dedup {
         val unit = arr.map(x => (x * inv).toFloat)
         (id, unit, Ann.hyperplaneKey(unit, planes, seed))
       }
-      .toDF("id", "unit", "bucket")
-      .cache()
+      .toDF("id", "unit", "bucket"))
     // tap("units") is pass-through by default; with a dump tap the
     // verification reads the SAME unit vectors the oracle sees
     val units = tap("units", vecs.select($"id", $"unit"))
@@ -599,14 +578,12 @@ object Dedup {
     val cand = tap("cands", bucketPairs(vecs.select($"bucket", $"id"), pairBudget, starFanout))
     val u0 = units.select($"id".as("id0"), $"unit".as("u0"))
     val u1 = units.select($"id".as("id1"), $"unit".as("u1"))
-    try {
-      val out = cand.join(u0, "id0").join(u1, "id1")
-        .withColumn("cosine", Ann.dot($"u0", $"u1"))
-        .where($"cosine" >= cosineThreshold)
-        .select($"id0", $"id1", $"cosine")
-        .cache()
-      out.count()
-      out
-    } finally vecs.unpersist()
+    val out = cand.join(u0, "id0").join(u1, "id1")
+      .withColumn("cosine", Ann.dot($"u0", $"u1"))
+      .where($"cosine" >= cosineThreshold)
+      .select($"id0", $"id1", $"cosine")
+      .cache()
+    out.count()
+    out
   }
 }

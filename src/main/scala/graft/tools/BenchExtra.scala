@@ -7,8 +7,8 @@ import graft.SparkEntry
 
 /** Optimization-round measurement harness (guide §1) — SEPARATE from the
   * frozen graft.Bench: per-query wall seconds PLUS Spark job/stage/task
-  * counts (host-noise-free plan-shape signals) and optional
-  * `.explain("formatted")` dumps.
+  * counts and shuffle bytes written (host-noise-free plan-shape
+  * signals) and optional `.explain("formatted")` dumps.
   *
   * Env:
   *   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
@@ -28,9 +28,14 @@ object BenchExtra {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
     override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = { stages.incrementAndGet(); () }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      Option(t.taskMetrics).foreach(m => shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      ()
+    }
   }
 
   private def reset(spark: SparkSession): Unit = {
@@ -98,7 +103,7 @@ object BenchExtra {
     val results = qs.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
       var best = Double.MaxValue
-      var bestJobs = 0; var bestStages = 0; var bestTasks = 0
+      var bestJobs = 0; var bestStages = 0; var bestTasks = 0; var bestShuffleMb = 0.0
       var bestCanary = 0.0
       val secs = (1 to reps).map { _ =>
         reset(spark)
@@ -114,7 +119,7 @@ object BenchExtra {
         spark.sparkContext.removeSparkListener(c)
         if (sec < best) {
           best = sec; bestJobs = c.jobs.get; bestStages = c.stages.get
-          bestTasks = c.tasks.get; bestCanary = canary
+          bestTasks = c.tasks.get; bestShuffleMb = c.shuffleBytes.get / 1e6; bestCanary = canary
         }
         sec
       }.sorted
@@ -130,13 +135,14 @@ object BenchExtra {
       }
       println(f"$name%-26s ${best}%8.2f s  med=$median%.2f max=${secs.last}%.2f  " +
         f"jobs=$bestJobs%-4d stages=$bestStages%-4d " +
-        f"tasks=$bestTasks%-6d canary=$bestCanary%.0f")
-      (name, best, bestJobs, bestStages, bestTasks)
+        f"tasks=$bestTasks%-6d shuffle=$bestShuffleMb%.2fMB canary=$bestCanary%.0f")
+      (name, best, bestJobs, bestStages, bestTasks, bestShuffleMb)
     }
     spark.sparkContext.setJobDescription(null)
     val total = results.map(_._2).sum
     println(f"TOTAL ${total}%.2f s over ${results.size} queries; " +
-      s"jobs=${results.map(_._3).sum} stages=${results.map(_._4).sum} tasks=${results.map(_._5).sum}")
+      s"jobs=${results.map(_._3).sum} stages=${results.map(_._4).sum} tasks=${results.map(_._5).sum} " +
+      f"shuffle=${results.map(_._6).sum}%.2fMB")
     spark.stop()
   }
 }

@@ -608,19 +608,85 @@ class OpsSpec extends AnyFunSuite {
   private def countRootActions(body: => Unit): Int =
     SparkTestBase.countRootActions(body)
 
-  test("minhashLsh runs in exactly 3 root actions (census + fused CC gate + materialize)") {
-    // the round-4 pipeline ran 4: bucketPairs census, CC's e.count()
-    // gate, CC's collect, and the eager materialize — the count+collect
-    // executed the whole verify pipeline TWICE on the (always-taken at
-    // this scale) driver-finish path. Round 5 fuses the gate into one
-    // limit-collect; this pins the job-shrink so it cannot regress.
+  test("minhashLsh runs in exactly 4 root actions (census, pair side, CC gate, materialize)") {
+    // CC's gate is one limit-collect: a separate count + collect would
+    // execute the whole verify pipeline twice on the driver-finish
+    // path. The pair-side count is there on purpose: it gives the g1
+    // attach its real size, so a small pair side is broadcast instead
+    // of every gram array being shuffled. Pinned so neither regresses.
     var out: org.apache.spark.sql.DataFrame = null
     val n = countRootActions {
       out = Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35)
     }
     out.unpersist()
-    assert(n == 3, s"minhashLsh took $n root actions, expected 3 " +
-      "(bucketPairs census, fused CC limit-collect gate, eager materialize)")
+    assert(n == 4, s"minhashLsh took $n root actions, expected 4 " +
+      "(bucketPairs census, pair-side materialize, fused CC limit-collect gate, eager materialize)")
+  }
+
+  test("minhashLsh verify plan: the pair side broadcasts under the threshold, " +
+      "shuffle-hash at -1; same clusters") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    object Plans extends AdaptiveSparkPlanHelper
+    // the verified frame's plan, read inside the tap: its pair side and
+    // signatures are still cached there
+    def run(): (SparkPlan, Seq[(Long, Long, Long)]) = {
+      var plan: SparkPlan = null
+      val out = Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35,
+        tap = (stage, df) => { if (stage == "verified") plan = df.queryExecution.executedPlan; df })
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+      out.unpersist()
+      (plan, rows)
+    }
+    val (small, clusters) = run()
+    assert(Plans.collect(small) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"a pair side under the threshold must verify without an exchange:\n$small")
+    val bhj = Plans.collect(small) { case j: BroadcastHashJoinExec => j }
+    assert(bhj.exists(j => (if (j.buildSide == BuildLeft) j.left else j.right)
+      .output.map(_.name).contains("g0")), s"the pair side (id0, id1, g0) must be the build side:\n$small")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (large, clustersLarge) =
+      try run() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Plans.collect(large) { case j: ShuffledHashJoinExec => j }.nonEmpty,
+      s"with broadcasting off the g1 attach must be shuffle-hash:\n$large")
+    assert(clustersLarge == clusters, "the join strategy changed the cluster table")
+  }
+
+  test("near-dup operators release their caches when an action inside them fails") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_failing").toString
+    docs.select($"id", $"text").write.parquet(s"$dir/docs")
+    embeddings.where($"vec_id" < 200).select($"vec_id", $"embedding").write.parquet(s"$dir/vecs")
+    // Parquet-backed, so the planted error fires in the first action
+    // (the census), not while the optimizer folds a local relation
+    val badDocs = spark.read.parquet(s"$dir/docs")
+      .withColumn("text", when($"id" === 5L, raise_error(lit("planted failure"))).otherwise($"text"))
+    val badVecs = spark.read.parquet(s"$dir/vecs").withColumn("embedding",
+      when($"vec_id" === 5L, raise_error(lit("planted failure"))).otherwise($"embedding"))
+    val tapped = scala.collection.mutable.ArrayBuffer.empty[(String, org.apache.spark.sql.DataFrame)]
+    val tap: Dedup.Tap = (stage, df) => { tapped += stage -> df; df }
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashLsh" -> (() => Dedup.minhashLsh(badDocs, "id", "text", tap = tap)),
+      "simhash" -> (() => Dedup.simhash(badDocs, "id", "text", tap = tap)),
+      "embeddingNearDup" -> (() => Dedup.embeddingNearDup(badVecs, "vec_id", "embedding", tap = tap)))
+    for ((name, op) <- ops) {
+      tapped.clear()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Exception](op())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("planted failure")), s"$name: $e")
+      assert(tapped.nonEmpty, s"$name tapped no frame before failing")
+      val stillCached = tapped.collect {
+        case (stage, df) if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE => stage
+      }
+      assert(stillCached.isEmpty, s"$name left tapped frames cached: $stillCached")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name leaked persistent RDDs: $leaked")
+    }
   }
 
   test("ngramJaccardPairs releases its gram-index cache (eager-and-release contract)") {
