@@ -125,15 +125,17 @@ object Linkage {
   /** B3 `list_blocking` (`/root/reference/anonlink/blocking.py:220-240`):
     * block ids supplied by an external `(dsetId, recId, key)` table —
     * a plain equi-join replacing the content-derived band keys. The
-    * result feeds [[saltExploded]]/[[scorePairs]] like any other
-    * blocking. */
+    * result feeds [[saltExplodedWithStats]]/[[scorePairs]] like any
+    * other blocking. */
   def listBlocked(encoded: Dataset[EncodedRecord], keys: DataFrame): DataFrame = {
     encoded.toDF()
       .join(keys, Seq("dsetId", "recId"))
       .select(col("key"), col("dsetId"), col("recId"), col("clk"), col("pop"))
   }
 
-  /** Explode band keys and salt skewed blocks.
+  /** Explode band keys and salt skewed blocks, also reporting whether
+    * ANY block was salted — callers use it to skip the per-block top-k
+    * restoration window when every cell is already a whole block.
     *
     * Salting: per block key, the comparison rectangle |A|×|B| is tiled
     * into sA×sB cells each within `pairBudget`; A-side rows pick a
@@ -142,12 +144,6 @@ object Linkage {
     * Translation of `split_to_chunks`'s bounded-task guarantee
     * (`concurrency.py:74-86`) into key-space salting.
     */
-  def blockAndSalt(encoded: Dataset[EncodedRecord], params: LinkageParams): Dataset[BlockedRow] =
-    blockAndSaltWithStats(encoded, params)._1
-
-  /** As [[blockAndSalt]], also reporting whether ANY block was salted —
-    * callers use it to skip the per-block top-k restoration window when
-    * every cell is already a whole block. */
   def blockAndSaltWithStats(
       encoded: Dataset[EncodedRecord],
       params: LinkageParams): (Dataset[BlockedRow], Boolean) = {
@@ -158,12 +154,9 @@ object Linkage {
   }
 
   /** Salt an exploded `(key, dsetId, recId, clk, pop)` table — shared
-    * by band blocking ([[blockAndSalt]]) and external-key blocking
-    * ([[listBlocked]]). */
-  def saltExploded(exploded: DataFrame, params: LinkageParams): Dataset[BlockedRow] =
-    saltExplodedWithStats(exploded, params)._1
-
-  /** As [[saltExploded]], returning also whether any key was salted. */
+    * by band blocking ([[blockAndSaltWithStats]]) and external-key
+    * blocking ([[listBlocked]]) — returning also whether any key was
+    * salted. */
   def saltExplodedWithStats(
       exploded: DataFrame, params: LinkageParams): (Dataset[BlockedRow], Boolean) = {
     val spark = exploded.sparkSession
@@ -311,8 +304,9 @@ object Linkage {
     * plan when one side fits in executor memory (broadcast nested-loop
     * with the Dice kernel as the theta-predicate). Per-left top-k here
     * spans the WHOLE right side, exactly like the reference's
-    * one-against-many kernel (`dice.cpp:518`). */
-  /** NOTE: `comparisons` is updated inside a transformation — Spark
+    * one-against-many kernel (`dice.cpp:518`).
+    *
+    * NOTE: `comparisons` is updated inside a transformation — Spark
     * only guarantees exactly-once accumulator updates inside ACTIONS,
     * so task retries / multiple actions on the uncached result inflate
     * it (instrumentation, not bookkeeping; Bench's `require(acc == n²)`

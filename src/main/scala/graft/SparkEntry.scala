@@ -502,7 +502,7 @@ object SparkEntry {
     "smc_pairs" -> ((s, _) => {
       // S6: SMC similarity with both-sides top-k over the linkage corpus
       val enc = Linkage.encode(corpus(s), linkParams, col("dsetId"))
-      val blocked = Linkage.blockAndSalt(enc, linkParams)
+      val blocked = Linkage.blockAndSaltWithStats(enc, linkParams)._1
       // dedup multi-band duplicates BEFORE ranking: the same pair found
       // via two shared bands must not double-count in the both-sides
       // windows (the reference scores each pair once — no blocking there)

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.block.{Blocking, MinhashParams}
 import graft.core.Hashing
@@ -30,6 +31,12 @@ import graft.solve.ConnectedComponents
   *     m deterministic anchors instead of enumerating its n²/2
   *     triangle: n·m pairs, O(m) per record, the bucket kept
   *     connected through the anchors.
+  *
+  * [[minhashLsh]] and [[simhash]] are one pipeline ([[nearDupClusters]])
+  * taking the signature and the verify predicate as parameters, as
+  * anonlink's `find_candidate_pairs` takes its similarity function;
+  * they and [[embeddingNearDup]] verify through one join rule
+  * ([[attachPayloads]]).
   */
 object Dedup {
 
@@ -83,8 +90,8 @@ object Dedup {
     * (anchor-anchor pairs only from the smaller anchor's row).
     *
     * The star census is collected to the driver like the linkage
-    * path's hot keys (`Linkage.saltExploded`): star buckets are few by
-    * construction — each carries > √(2·pairBudget) rows.
+    * path's hot keys (`Linkage.saltExplodedWithStats`): star buckets
+    * are few by construction — each carries > √(2·pairBudget) rows.
     *
     * Pairs are NOT deduplicated across buckets — callers `.distinct()`.
     */
@@ -282,23 +289,98 @@ object Dedup {
     finally cached.foreach(_.unpersist())
   }
 
-  /** MinHash + LSH near-dup clusters:
-    * exact pre-collapse → shingle → minhash signature → band keys →
-    * bounded same-band pairs → pair side (pairs + g0 gram arrays,
-    * cached and counted) → exact-Jaccard verification against the g1
-    * gram arrays → CC → member re-expansion → (id, clusterId, keeper).
+  /** The one verify join of the near-dup operators: `(id0, id1)` pairs
+    * ⋈ an `(id, payload)` frame on both ends → `(id0, id1, p0, p1)`.
     *
-    * The returned frame is CACHED and already materialized (the
-    * operator evaluates eagerly so its internal caches — rep collapse,
-    * signatures, band table, pair side — can be unpersisted before
-    * returning instead of leaking across a session, also when an
-    * action fails); callers `unpersist()` it when done. Four root
-    * actions: the star census, the pair-side count, CC's gate and the
-    * result's materialize. The pair-side count is what lets the planner
-    * size the g1 attach by its real bytes: a pair side within
-    * `spark.sql.autoBroadcastJoinThreshold` is broadcast and the
-    * signatures stream without an exchange; a larger one is joined
-    * SHUFFLE_HASH.
+    * The pair side (pairs ⋈ `p0`) is cached through `cache` and counted
+    * once, so it carries its real size and the `p1` attach is planned
+    * from it: when the pair side or the (cached, already materialized)
+    * payload side is within `spark.sql.autoBroadcastJoinThreshold`, the
+    * planner broadcasts one and streams the other with no exchange;
+    * when neither is (the 50k-doc scale corpus, or a threshold of -1)
+    * SHUFFLE_HASH — unhinted it planned as sort-merge, sorting ARRAY
+    * payloads on both sides. The payload-side test matters when the
+    * pairs outnumber the payloads: `embed_neardup` at sf0.1 pairs 2 000
+    * vectors into ~500k candidates, and a forced SHUFFLE_HASH there
+    * shuffled 9.7 MB where broadcasting the vectors shuffles none.
+    *
+    * Where the bytes go (dedup-pages, 12k docs, seed 1, [[minhashLsh]]):
+    * with both attaches planned off estimates the run shuffled 26.5 MB,
+    * 16.07 MB of it in the `p1` attach — AQE exchanged all 11 573 gram
+    * arrays (10.57 MB) and the pair side (5.50 MB) before broadcasting
+    * that side. Counted first, the pair side (5.5 MB; the grams are
+    * 14.4 MB) broadcasts and the run shuffles 10.4 MB. The `p0` attach
+    * is still planned from estimates: at 50k docs AQE exchanges every
+    * payload before it broadcasts the pairs. */
+  private def attachPayloads(cache: DataFrame => DataFrame, pairs: DataFrame,
+      payload: DataFrame): DataFrame = {
+    val p0 = payload.select(col("id").as("id0"), col("payload").as("p0"))
+    val p1 = payload.select(col("id").as("id1"), col("payload").as("p1"))
+    val pairSide = cache(pairs.join(p0, "id0"))
+    pairSide.count()
+    def broadcastable(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    pairSide.join(
+      if (broadcastable(pairSide) || broadcastable(p1)) p1 else p1.hint("SHUFFLE_HASH"), "id1")
+  }
+
+  /** The near-dup cluster pipeline of [[minhashLsh]] and [[simhash]]:
+    * exact pre-collapse (tapped `withrep`) → `signature(text)` per
+    * representative, giving its bucket keys and verify payload →
+    * same-bucket pairs ([[bucketPairs]]), distinct → [[attachPayloads]]
+    * → `matches(p0, p1)` (tapped `verified`) → CC → member
+    * re-expansion → (id, clusterId, keeper).
+    *
+    * The returned frame is CACHED and already materialized (eager, so
+    * the internal caches — rep collapse, signatures, bucket table, pair
+    * side — are unpersisted before returning, also when an action
+    * fails); callers `unpersist()` it when done. Four root actions:
+    * the star census, the pair-side count, CC's gate and the result's
+    * materialize. */
+  private def nearDupClusters[P: TypeTag](
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      pairBudget: Long,
+      starFanout: Int,
+      tap: Tap)(
+      signature: String => (Array[Long], P),
+      matches: (Column, Column) => Column): DataFrame = releasing { cache =>
+    val spark = docs.sparkSession
+    import spark.implicits._
+
+    val withRep = cache(tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)))
+    val sigs = cache(withRep.where($"id" === $"rep").select($"id", $"text")
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        val (keys, payload) = signature(text)
+        (id, keys, payload)
+      }
+      .toDF("id", "keys", "payload"))
+    // cached: the exploded bucket table is scanned by the census AND the
+    // pair generation — uncached each scan re-explodes (and
+    // re-deserializes the key arrays from) the signature cache
+    val bucketed = cache(sigs.select(explode($"keys").as("bucket"), $"id"))
+    val verified = attachPayloads(cache,
+        bucketPairs(bucketed, pairBudget, starFanout).distinct(), sigs.select($"id", $"payload"))
+      .where(matches($"p0", $"p1"))
+      .select($"id0", $"id1")
+
+    // CC is eager (iterative jobs / driver finish), so by the time it
+    // returns, the signatures and the pair side are fully consumed; the
+    // result is then cached + materialized so withRep can be released
+    // too — nothing internal outlives the call
+    val comps = ConnectedComponents.run(
+      tap("verified", verified).select($"id0".as("src"), $"id1".as("dst")))
+    val out = expandReps(withRep, comps).cache()
+    out.count()
+    out
+  }
+
+  /** MinHash + LSH near-dup clusters ([[nearDupClusters]]): word
+    * n-gram minhash band keys as buckets, verified by exact n-gram
+    * Jaccard of the distinct gram sets. Cached and materialized on
+    * return; callers `unpersist()` it.
     *
     * @param jaccardThreshold verified n-gram Jaccard to call a dup.
     * @param pairBudget max unordered pairs a band bucket may emit as
@@ -324,94 +406,30 @@ object Dedup {
       seed: Long = 0xded0bL,
       pairBudget: Long = 4L * 1000 * 1000,
       starFanout: Int = 64,
-      tap: Tap = noTap): DataFrame = releasing { cache =>
-    val spark = docs.sparkSession
-    import spark.implicits._
-
-    val withRep = cache(tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)))
-    // one pass per representative: rep → (band keys, distinct gram set)
-    val sigs = cache(withRep.where($"id" === $"rep").select($"id", $"text")
-      .as[(Long, String)]
-      .map { case (id, text) =>
+      tap: Tap = noTap): DataFrame =
+    nearDupClusters(docs, idCol, textCol, pairBudget, starFanout, tap)(
+      text => {
         val grams = ClkEncoder.wordNgramHashes(text, ngramN, seed).distinct
-        (id, Blocking.minhashBandKeys(grams, params), grams)
-      }
-      .toDF("id", "bands", "grams"))
-
-    // cached: the exploded band table is scanned by the census AND the
-    // pair generation — uncached each scan re-explodes (and
-    // re-deserializes the band arrays from) the signature cache
-    val banded = cache(sigs.select(explode($"bands").as("bucket"), $"id"))
-
-    // verify with exact n-gram Jaccard by attaching the two (distinct)
-    // gram ARRAYS to each candidate pair and intersecting them in one
-    // codegen'd expression. This replaced a gram-inverted-index join
-    // ((pair, gram) scalar rows → two equi-joins → count per pair),
-    // which cost ~5-8 s on the 50k-doc scale corpus against <1 s here.
-    // Intersection counts are identical (gram sets are distinct per doc
-    // on both paths), so the Jaccard doubles — and the verified edge
-    // set — are bit-identical.
-    //
-    // Where the bytes go (dedup-pages, 12k docs, seed 1): with both
-    // gram attaches planned off estimates the run shuffled 26.5 MB, of
-    // which 16.07 MB was the g1 attach — AQE exchanged all 11 573 gram
-    // arrays (10.57 MB) and the pair+g0 side (5.50 MB) before turning
-    // the join into a broadcast of that side; the rest is the census
-    // (3.03 MB), the cold bucket lists (6.63 MB) and the distinct
-    // (0.43 MB). So the pair side is built first: the distinct pairs
-    // join the signature cache for g0 (the pairs broadcast, the
-    // signatures stream, no exchange), and one count() materializes it.
-    // Its cache then carries its real size (5.5 MB there; the gram
-    // table is 14.4 MB), and the g1 attach is decided from it:
-    //  - within `spark.sql.autoBroadcastJoinThreshold`: the planner
-    //    broadcasts the pair side and streams the signatures, no
-    //    exchange (10.4 MB of shuffle per dedup-pages run in all);
-    //  - over it (the 50k-doc scale corpus; or a threshold of -1):
-    //    SHUFFLE_HASH on the gram side. Unhinted that join planned as
-    //    sort-merge, sorting the ARRAY payloads on both sides; the hint
-    //    keeps the two exchanges and drops both sorts (the hash build
-    //    per partition is a bounded signature slice, never a skewed
-    //    key's whole payload).
-    val gramsById = sigs.select($"id", $"grams")
-    val pairSide = cache(bucketPairs(banded, pairBudget, starFanout).distinct()
-      .join(gramsById.select($"id".as("id0"), $"grams".as("g0")), "id0"))
-    pairSide.count()
-    val g1Side = gramsById.select($"id".as("id1"), $"grams".as("g1"))
-    val broadcastable = pairSide.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      spark.sessionState.conf.autoBroadcastJoinThreshold
-    val verified = pairSide
-      .join(if (broadcastable) g1Side else g1Side.hint("SHUFFLE_HASH"), "id1")
-      .withColumn("inter", size(array_intersect($"g0", $"g1")).cast("long"))
-      .withColumn("n0", size($"g0").cast("long"))
-      .withColumn("n1", size($"g1").cast("long"))
+        (Blocking.minhashBandKeys(grams, params), grams)
+      },
+      // the two distinct gram ARRAYS intersected in one codegen'd
+      // expression (a gram-inverted-index join cost ~5-8 s on the
+      // 50k-doc scale corpus against <1 s here, bit-identical edges);
       // union == 0 ⇔ both gram sets empty ⇔ identical-as-shingled → 1.0
-      // (same convention as the reference-exact merge-intersect kernel
-      // this replaces)
-      .withColumn("jaccard",
-        when($"n0" + $"n1" - $"inter" === 0, lit(1.0))
-          .otherwise($"inter" / ($"n0" + $"n1" - $"inter")))
-      .where($"jaccard" >= jaccardThreshold)
-      .select($"id0", $"id1")
+      (g0, g1) => {
+        val inter = size(array_intersect(g0, g1)).cast("long")
+        val union = size(g0).cast("long") + size(g1).cast("long") - inter
+        when(union === 0, lit(1.0)).otherwise(inter / union) >= jaccardThreshold
+      })
 
-    // CC is eager (iterative jobs / driver finish), so by the time it
-    // returns, the signatures and the pair side are fully consumed; the
-    // result is then cached + materialized so withRep can be released
-    // too — nothing internal outlives the call
-    val comps = ConnectedComponents.run(
-      tap("verified", verified).select($"id0".as("src"), $"id1".as("dst")))
-    val out = expandReps(withRep, comps).cache()
-    out.count()
-    out
-  }
-
-  /** SimHash near-dup: exact pre-collapse → 64-bit simhash, banded
-    * into 4×16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ at least one
-    * chunk identical) → bounded same-chunk pairs → exact hamming ≤
-    * maxHamming → CC → member re-expansion.
+  /** SimHash near-dup: [[nearDupClusters]] with a 64-bit simhash as
+    * payload, banded into 4×16-bit chunks as buckets (pigeonhole:
+    * hamming ≤ 3 ⇒ at least one chunk identical), verified by exact
+    * hamming ≤ maxHamming.
     *
-    * Same eager-and-cached return contract and `starFanout` cap
-    * semantics as [[minhashLsh]] (simhash chunk buckets are just as
-    * exposed to distinct-near-identical boilerplate clusters). */
+    * Same return contract, root actions and `starFanout` semantics as
+    * [[minhashLsh]] (chunk buckets are just as exposed to
+    * distinct-near-identical boilerplate clusters). */
   def simhash(
       docs: DataFrame,
       idCol: String,
@@ -422,38 +440,13 @@ object Dedup {
       starFanout: Int = 64,
       tap: Tap = noTap): DataFrame = {
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for hamming <= 3")
-    releasing { cache =>
-      val spark = docs.sparkSession
-      import spark.implicits._
-
-      val withRep = cache(tap("withrep", withTextRep(rebalanced(docs), idCol, textCol)))
-      val sigs = cache(withRep.where($"id" === $"rep").select($"id", $"text")
-        .as[(Long, String)]
-        .map { case (id, text) => (id, TextOps.simhash(text, seed)) }
-        .toDF("id", "sig"))
-
-      // bucket = (chunk index, 16-bit chunk value) packed into one long;
-      // cached for the census + pair-generation scans like minhashLsh's banded
-      val chunked = cache(sigs.select(
-        explode(array((0 until 4).map(c =>
-          (shiftright($"sig", c * 16).bitwiseAND(0xffffL) + lit(c.toLong << 16)).as(s"k$c")): _*))
-          .as("bucket"),
-        $"id"))
-      val pairs = cache(bucketPairs(chunked, pairBudget, starFanout).distinct())
-
-      val s0 = sigs.select($"id".as("id0"), $"sig".as("s0"))
-      val s1 = sigs.select($"id".as("id1"), $"sig".as("s1"))
-      val verified = pairs.join(s0, "id0").join(s1, "id1")
-        .withColumn("hamming", bit_count($"s0".bitwiseXOR($"s1")))
-        .where($"hamming" <= maxHamming)
-        .select($"id0", $"id1")
-
-      val comps = ConnectedComponents.run(
-        tap("verified", verified).select($"id0".as("src"), $"id1".as("dst")))
-      val out = expandReps(withRep, comps).cache()
-      out.count()
-      out
-    }
+    nearDupClusters(docs, idCol, textCol, pairBudget, starFanout, tap)(
+      text => {
+        val sig = TextOps.simhash(text, seed)
+        // bucket = (chunk index, 16-bit chunk value) packed into one long
+        (Array.tabulate(4)(c => ((sig >>> (c * 16)) & 0xffffL) + (c.toLong << 16)), sig)
+      },
+      (s0, s1) => bit_count(s0.bitwiseXOR(s1)) <= maxHamming)
   }
 
   /** Direct exact n-gram Jaccard pairs via gram-inverted-index
@@ -535,9 +528,11 @@ object Dedup {
     * `planes` must grow with corpus size (buckets ≈ 2^planes); the
     * star path bounds a hot bucket's pairs at any setting.
     *
-    * Same eager-and-cached return contract and `starFanout` semantics
-    * as [[minhashLsh]] (a template cluster of near-identical
-    * embeddings lands in one hyperplane bucket). */
+    * Same eager-and-cached return contract, verify-join rule
+    * ([[attachPayloads]]) and `starFanout` semantics as [[minhashLsh]]
+    * (a template cluster of near-identical embeddings lands in one
+    * hyperplane bucket). Three root actions: the star census, the
+    * pair-side count and the result's materialize. */
   def embeddingNearDup(
       embeddings: DataFrame,
       idCol: String,
@@ -576,10 +571,8 @@ object Dedup {
     // emits each unordered pair of a bucket exactly once, on the cold
     // and the star path alike
     val cand = tap("cands", bucketPairs(vecs.select($"bucket", $"id"), pairBudget, starFanout))
-    val u0 = units.select($"id".as("id0"), $"unit".as("u0"))
-    val u1 = units.select($"id".as("id1"), $"unit".as("u1"))
-    val out = cand.join(u0, "id0").join(u1, "id1")
-      .withColumn("cosine", Ann.dot($"u0", $"u1"))
+    val out = attachPayloads(cache, cand, units.select($"id", $"unit".as("payload")))
+      .withColumn("cosine", Ann.dot($"p0", $"p1"))
       .where($"cosine" >= cosineThreshold)
       .select($"id0", $"id1", $"cosine")
       .cache()

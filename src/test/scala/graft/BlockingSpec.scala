@@ -86,39 +86,4 @@ class BlockingSpec extends AnyFunSuite {
     assert(k1.length == p.bands)
     assert(Blocking.minhashBandKeys(Array.empty, p).isEmpty)
   }
-
-  test("chunking: coverage, no overlap, bounded cell size (ref test_concurrency.py:20-61)") {
-    import graft.io.Chunking
-    for {
-      sizes <- Seq(Seq(100L, 100L), Seq(1L, 1L), Seq(1000L, 3L), Seq(50L, 80L, 30L))
-      aim <- Seq(10.0, 100.0, 2500.0)
-    } {
-      val chunks = Chunking.splitToChunks(aim, sizes)
-      // bounded size (reference guarantee: aim/4 < size < aim*4 unless tiny)
-      chunks.foreach { ch =>
-        val size = ch.map(c => c.range._2 - c.range._1).product
-        val i0 = ch(0).datasetIndex; val i1 = ch(1).datasetIndex
-        assert(size < aim * 4, s"chunk too big: $ch")
-        assert(aim / 4 < size || 4 * aim > sizes(i0) * sizes(i1), s"chunk too small: $ch")
-      }
-      // full coverage without overlap
-      val covered = scala.collection.mutable.Set.empty[(Int, Int, Long, Long)]
-      chunks.foreach { ch =>
-        for {
-          j0 <- ch(0).range._1 until ch(0).range._2
-          j1 <- ch(1).range._1 until ch(1).range._2
-        } {
-          val cell = (ch(0).datasetIndex, ch(1).datasetIndex, j0, j1)
-          assert(!covered.contains(cell), s"overlap at $cell")
-          covered += cell
-        }
-      }
-      val expected = (for {
-        Seq((i0, s0), (i1, s1)) <- sizes.zipWithIndex.map { case (s, i) => (i, s) }.combinations(2)
-        j0 <- 0L until s0
-        j1 <- 0L until s1
-      } yield (i0, i1, j0, j1)).toSet
-      assert(covered.toSet == expected)
-    }
-  }
 }

@@ -58,7 +58,7 @@ class FixtureSpec extends AnyFunSuite {
     val enc = Linkage.encode(pages, params, col("dsetId")).cache()
     // external key table: everyone in block 7 == NoBlocking semantics
     val keys = enc.select($"dsetId", $"recId").withColumn("key", lit(7L))
-    val blocked = Linkage.saltExploded(Linkage.listBlocked(enc, keys), params)
+    val blocked = Linkage.saltExplodedWithStats(Linkage.listBlocked(enc, keys), params)._1
     val got = Linkage.scorePairs(blocked, params).collect()
       .map(r => (r.getDouble(0), r.getLong(3), r.getLong(4))).toSet
     val noBlock = Linkage.candidatePairs(pages, params.copy(blocking = NoBlocking), col("dsetId"))

@@ -68,7 +68,8 @@ class OpsSpec extends AnyFunSuite {
     // SMC is two-party (ref _smc.py:109-112): a third dataset, or a
     // signed id, must fail instead of being scored as dataset 1
     for (bad <- Seq(2, -1)) {
-      val blocked = Linkage.blockAndSalt((a ++ b ++ mk(bad, 3)).toDS(), LinkageParams(blocking = NoBlocking))
+      val blocked = Linkage.blockAndSaltWithStats((a ++ b ++ mk(bad, 3)).toDS(),
+        LinkageParams(blocking = NoBlocking))._1
       val e = intercept[Exception](Smc.scorePairs(blocked, 0.5, 1024).collect())
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(x => String.valueOf(x.getMessage).contains("SMC supports exactly 2 datasets")), s"dsetId=$bad: $e")
@@ -608,22 +609,29 @@ class OpsSpec extends AnyFunSuite {
   private def countRootActions(body: => Unit): Int =
     SparkTestBase.countRootActions(body)
 
-  test("minhashLsh runs in exactly 4 root actions (census, pair side, CC gate, materialize)") {
+  test("near-dup operators run in their pinned root actions " +
+      "(minhashLsh 4, simhash 4, embeddingNearDup 3)") {
+    // minhashLsh/simhash: the bucketPairs census, the pair-side count,
+    // CC's gate and the eager materialize; embeddingNearDup has no CC.
     // CC's gate is one limit-collect: a separate count + collect would
     // execute the whole verify pipeline twice on the driver-finish
-    // path. The pair-side count is there on purpose: it gives the g1
-    // attach its real size, so a small pair side is broadcast instead
-    // of every gram array being shuffled. Pinned so neither regresses.
-    var out: org.apache.spark.sql.DataFrame = null
-    val n = countRootActions {
-      out = Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35)
+    // path. The pair-side count is there on purpose: it gives the
+    // second payload attach its real size, so a small pair side is
+    // broadcast instead of every payload being shuffled. Pinned so
+    // neither regresses.
+    val ops = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("minhashLsh", 4, () => Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35)),
+      ("simhash", 4, () => Dedup.simhash(docs, "id", "text")),
+      ("embeddingNearDup", 3, () => Dedup.embeddingNearDup(embeddings, "vec_id", "embedding")))
+    for ((name, want, op) <- ops) {
+      var out: org.apache.spark.sql.DataFrame = null
+      val n = countRootActions { out = op() }
+      out.unpersist()
+      assert(n == want, s"$name took $n root actions, expected $want")
     }
-    out.unpersist()
-    assert(n == 4, s"minhashLsh took $n root actions, expected 4 " +
-      "(bucketPairs census, pair-side materialize, fused CC limit-collect gate, eager materialize)")
   }
 
-  test("minhashLsh verify plan: the pair side broadcasts under the threshold, " +
+  test("minhashLsh and simhash verify plan: the pair side broadcasts under the threshold, " +
       "shuffle-hash at -1; same clusters") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -631,30 +639,35 @@ class OpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     object Plans extends AdaptiveSparkPlanHelper
-    // the verified frame's plan, read inside the tap: its pair side and
-    // signatures are still cached there
-    def run(): (SparkPlan, Seq[(Long, Long, Long)]) = {
-      var plan: SparkPlan = null
-      val out = Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35,
-        tap = (stage, df) => { if (stage == "verified") plan = df.queryExecution.executedPlan; df })
-      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      out.unpersist()
-      (plan, rows)
+    val ops = Seq[(String, Dedup.Tap => org.apache.spark.sql.DataFrame)](
+      "minhashLsh" -> (tap => Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35, tap = tap)),
+      "simhash" -> (tap => Dedup.simhash(docs, "id", "text", tap = tap)))
+    for ((name, op) <- ops) {
+      // the verified frame's plan, read inside the tap: its pair side
+      // and signatures are still cached there
+      def run(): (SparkPlan, Seq[(Long, Long, Long)]) = {
+        var plan: SparkPlan = null
+        val out = op((stage, df) => { if (stage == "verified") plan = df.queryExecution.executedPlan; df })
+        val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+        out.unpersist()
+        (plan, rows)
+      }
+      val (small, clusters) = run()
+      assert(Plans.collect(small) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"$name: a pair side under the threshold must verify without an exchange:\n$small")
+      val bhj = Plans.collect(small) { case j: BroadcastHashJoinExec => j }
+      assert(bhj.exists(j => (if (j.buildSide == BuildLeft) j.left else j.right)
+        .output.map(_.name).contains("p0")),
+        s"$name: the pair side (id0, id1, p0) must be the build side:\n$small")
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      val (large, clustersLarge) =
+        try run() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(Plans.collect(large) { case j: ShuffledHashJoinExec => j }.nonEmpty,
+        s"$name: with broadcasting off the p1 attach must be shuffle-hash:\n$large")
+      assert(clustersLarge == clusters, s"$name: the join strategy changed the cluster table")
     }
-    val (small, clusters) = run()
-    assert(Plans.collect(small) { case e: ShuffleExchangeExec => e }.isEmpty,
-      s"a pair side under the threshold must verify without an exchange:\n$small")
-    val bhj = Plans.collect(small) { case j: BroadcastHashJoinExec => j }
-    assert(bhj.exists(j => (if (j.buildSide == BuildLeft) j.left else j.right)
-      .output.map(_.name).contains("g0")), s"the pair side (id0, id1, g0) must be the build side:\n$small")
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    val (large, clustersLarge) =
-      try run() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    assert(Plans.collect(large) { case j: ShuffledHashJoinExec => j }.nonEmpty,
-      s"with broadcasting off the g1 attach must be shuffle-hash:\n$large")
-    assert(clustersLarge == clusters, "the join strategy changed the cluster table")
   }
 
   test("near-dup operators release their caches when an action inside them fails") {
