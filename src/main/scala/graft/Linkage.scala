@@ -418,10 +418,11 @@ object Linkage {
   /** V2: transitive clustering of the candidate pairs. Returns
     * (dsetId, recId, clusterId).
     *
-    * Without a checkpointDir the returned frame is CACHED and already
-    * materialized (clusterPairs' eager-and-release contract) —
-    * `unpersist()` it when done; with a checkpointDir the result reads
-    * from its snapshot and holds no cache.
+    * Without a checkpointDir the returned frame is clusterPairs'
+    * result: a driver-built local relation for small pair sets, cached
+    * and materialized otherwise — `unpersist()` it when done (a no-op
+    * on the local relation); with a checkpointDir the result reads from
+    * its snapshot and holds no cache.
     *
     * `inputKey` feeds the snapshot content key alongside params — pass
     * anything that identifies the PAIRS' provenance (run() passes the
@@ -443,10 +444,10 @@ object Linkage {
         checkpointDir = params.checkpointDir.map(d => s"$d/cc"))
       computed
     }
-    // clusterPairs returns its result cached (eager-and-release
-    // contract); once a snapshot supersedes it, the cache is dead
-    // weight — release it. Without a checkpointDir, out EQ computed and
-    // the cache IS the returned value (caller unpersists).
+    // clusterPairs returns a big result cached; once a snapshot
+    // supersedes it, the cache is dead weight — release it. Without a
+    // checkpointDir, out EQ computed and the cache IS the returned
+    // value (caller unpersists).
     if (computed != null && !(out eq computed)) computed.unpersist()
     // the clusters snapshot (or localCheckpoint) now owns the result —
     // the CC round snapshots under cc/ are dead weight; drop them
@@ -461,8 +462,9 @@ object Linkage {
   /** End-to-end: pages → clusters (with url identity attached). The
     * candidate pairs are cached (or snapshotted, with a checkpointDir)
     * so the clustering iterations don't re-run the scoring pipeline.
-    * Both returned frames are cached without a checkpointDir (see
-    * [[clusters]]) — the caller unpersists both when done. */
+    * Without a checkpointDir the pairs come back cached and the clusters
+    * as [[clusters]] returns them — the caller unpersists both when
+    * done. */
   def run(pages: DataFrame, params: LinkageParams,
       dsetIdExpr: org.apache.spark.sql.Column): (DataFrame, DataFrame) = {
     val pairs = candidatePairs(pages, params, dsetIdExpr)

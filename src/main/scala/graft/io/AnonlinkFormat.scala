@@ -33,8 +33,8 @@ import graft.cand.Candidates
   * (round-trips exactly, including a 2^64-1 record index).
   *
   * This is the LITERAL wire path (Z1/Z2/Z3) for federating with
-  * anonlink shards; [[CandidateIO]]'s Parquet exchange remains the
-  * engine-native path (SURVEY §2.6). Spark glue: [[dumpShards]] writes
+  * anonlink shards; inside the engine, candidate pairs travel as
+  * Parquet snapshots ([[Snapshots]]). Spark glue: [[dumpShards]] writes
   * one sorted shard per partition (the reference's worker-dump step),
   * [[merge]] recombines, [[loadPairs]] parses shards executor-side via
   * the `binaryFile` source.

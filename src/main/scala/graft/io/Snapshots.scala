@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.charset.StandardCharsets
@@ -13,7 +14,8 @@ import java.nio.charset.StandardCharsets
   * runtime jar exists in this sandbox (verified: /opt/spark/jars has
   * Parquet/Avro only — SURVEY §7.1), so snapshots are Parquet dirs plus
   * a JSON manifest recording: snapshot id (content-derived), row count,
-  * per-file row counts (lineage), and schema. `resumeOrCompute`
+  * per-file row counts (lineage), and schema, plus the exact Spark
+  * schema (`_SCHEMA.json`) that resumes read back. `resumeOrCompute`
   * gives each pipeline stage restart-into-the-middle semantics — the
   * Spark-batch analogue of the reference's dump/merge shard files
   * (`/root/reference/anonlink/serialization.py:182-338`).
@@ -75,24 +77,44 @@ object Snapshots {
       s""""${f.name}":"${f.dataType.simpleString}"""").mkString("{", ",", "}")
     val manifest =
       s"""{"snapshot_id":"$snapshotId","row_count":$rowCount,"partitions":$parts,"schema":$schemaJson}"""
-    val out = fs.create(new Path(p, "_MANIFEST.json"), true)
-    try out.write(manifest.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    // the schema before the manifest: exists() keys on the manifest,
+    // so a snapshot that counts as complete has its schema recorded
+    for ((name, text) <- Seq("_SCHEMA.json" -> df.schema.json, "_MANIFEST.json" -> manifest)) {
+      val out = fs.create(new Path(p, name), true)
+      try out.write(text.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
     spark.read.schema(df.schema).parquet(dir)
+  }
+
+  private def missing(dir: String, what: String, why: String): Nothing =
+    throw new IllegalStateException(
+      s"no $what for the snapshot under $dir: $why — rerun with a fresh checkpoint dir")
+
+  /** The text of the metadata file `name` of the snapshot under `dir`;
+    * fails loudly, naming `what` was wanted, when `dir` holds no
+    * complete snapshot or the snapshot has no such file. */
+  private def metaFile(dir: String, name: String, what: String, spark: SparkSession): String = {
+    if (!exists(dir, spark))
+      missing(dir, what, "no complete snapshot (manifest or _SUCCESS missing)")
+    val (fs, p) = fsFor(dir, spark)
+    val f = new Path(p, name)
+    if (!fs.exists(f)) missing(dir, what, s"it has no $name")
+    val in = fs.open(f)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
   /** The `row_count` of the snapshot under `dir`, read from its
     * manifest; fails loudly when `dir` holds no complete snapshot. */
-  def rowCount(dir: String, spark: SparkSession = SparkSession.active): Long = {
-    def fail(why: String): Nothing = throw new IllegalStateException(
-      s"no row count for the snapshot under $dir: $why — rerun with a fresh checkpoint dir")
-    if (!exists(dir, spark)) fail("no complete snapshot (manifest or _SUCCESS missing)")
-    val (fs, p) = fsFor(dir, spark)
-    val in = fs.open(new Path(p, "_MANIFEST.json"))
-    val manifest = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-    """"row_count":(\d+)""".r.findFirstMatchIn(manifest)
-      .fold(fail("the manifest has no row_count"))(_.group(1).toLong)
-  }
+  def rowCount(dir: String, spark: SparkSession = SparkSession.active): Long =
+    """"row_count":(\d+)""".r.findFirstMatchIn(metaFile(dir, "_MANIFEST.json", "row count", spark))
+      .fold(missing(dir, "row count", "the manifest has no row_count"))(_.group(1).toLong)
+
+  /** Re-read the snapshot under `dir` with the schema [[write]] recorded
+    * — no inference job; fails loudly when the schema is missing. */
+  private def read(dir: String, spark: SparkSession): DataFrame =
+    spark.read.schema(DataType.fromJson(metaFile(dir, "_SCHEMA.json", "schema", spark))
+      .asInstanceOf[StructType]).parquet(dir)
 
   /** Round-boundary lineage truncation for ITERATIVE solvers (CC,
     * distributed greedy). `localCheckpoint(eager)` truncates lineage
@@ -115,7 +137,7 @@ object Snapshots {
         n += 1
         val p = s"$d/r$n"
         df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
+        df.sparkSession.read.schema(df.schema).parquet(p)
     }
 
     /** Solver epilogue: snapshot the RESULT as the final round, then
@@ -150,7 +172,7 @@ object Snapshots {
       case None => compute
       case Some(d) =>
         val sd = stageDir(d, stage, contentKey)
-        if (exists(sd, spark)) spark.read.parquet(sd)
+        if (exists(sd, spark)) read(sd, spark)
         else write(compute, sd)
     }
 }

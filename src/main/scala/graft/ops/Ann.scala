@@ -82,15 +82,20 @@ object Ann {
     import spark.implicits._
     df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .as[(Long, Seq[Float])]
-      .map { case (id, v) =>
-        val arr = v.toArray
-        var norm = 0.0
-        var i = 0
-        while (i < arr.length) { norm += arr(i).toDouble * arr(i); i += 1 }
-        val inv = if (norm > 0) 1.0 / math.sqrt(norm) else 0.0
-        (id, arr.map(x => (x * inv).toFloat))
-      }
+      .map { case (id, v) => (id, unit(v)) }
       .toDF("id", "unit")
+  }
+
+  /** `v` scaled to unit length; the norm accumulates in double
+    * left-to-right, and a zero vector stays zero. The one
+    * normalization of the ANN and embedding near-dup operators. */
+  private[ops] def unit(v: Seq[Float]): Array[Float] = {
+    val arr = v.toArray
+    var norm = 0.0
+    var i = 0
+    while (i < arr.length) { norm += arr(i).toDouble * arr(i); i += 1 }
+    val inv = if (norm > 0) 1.0 / math.sqrt(norm) else 0.0
+    arr.map(x => (x * inv).toFloat)
   }
 
   /** Euclidean norm accumulated left-to-right in double — the naive

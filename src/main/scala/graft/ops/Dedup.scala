@@ -555,12 +555,7 @@ object Dedup {
       .where(col("vec").isNotNull)
       .as[(Long, Seq[Float])]
       .map { case (id, v) =>
-        val arr = v.toArray
-        var norm = 0.0
-        var i = 0
-        while (i < arr.length) { norm += arr(i).toDouble * arr(i); i += 1 }
-        val inv = if (norm > 0) 1.0 / math.sqrt(norm) else 0.0
-        val unit = arr.map(x => (x * inv).toFloat)
+        val unit = Ann.unit(v)
         (id, unit, Ann.hyperplaneKey(unit, planes, seed))
       }
       .toDF("id", "unit", "bucket"))

@@ -1,6 +1,6 @@
 package graft.solve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Distributed transitive-closure clustering: alternating
@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * upstream, the reference's greedy solver (anonlink
   * `solving/_multiparty_solving_python.py`) approaches the transitive
   * closure of mutual-best edges, and the BASELINE.json F1 ≥ 0.99
-  * budget absorbs the residual semantic gap (SURVEY §2.5 V2). The
-  * exact greedy solvers ([[DistributedProbGreedy]]) run it to split
-  * their input into components.
+  * budget absorbs the residual semantic gap (SURVEY §2.5 V2). It and
+  * the exact greedy solvers ([[DistributedProbGreedy]]) run one solve
+  * skeleton ([[solvePairs]]): one gate, a driver solve for small
+  * inputs, and otherwise [[run]] to split the input into components.
   *
   * Converges in O(log n) rounds on any graph (no diameter dependence —
   * a chain of length n labels in ~log n rounds, unlike naive label
@@ -37,8 +38,9 @@ object ConnectedComponents {
         * label it with a sequential union-find instead of iterating
         * Spark rounds — each distributed round costs two self-joins +
         * checkpoints, pure overhead on a small tail. Same concession
-        * the reference makes by solving single-threaded post-top-k. */
-      driverFinishThreshold: Long = 100000L,
+        * the reference makes by solving single-threaded post-top-k.
+        * 0 skips the gate and always iterates. */
+      driverFinishThreshold: Long = DriverFinishPairs,
       /** round snapshots go to stable storage when set (executor-loss-
         * safe — see [[graft.io.Snapshots.RoundCheckpointer]]); None →
         * localCheckpoint, the local-mode fast path. */
@@ -56,23 +58,12 @@ object ConnectedComponents {
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
       .distinct()
 
-    // ONE action for the gate: collect up to threshold+1 edges instead
-    // of count()-then-collect() — the count would execute the caller's
-    // full (uncached) upstream pipeline a second time just to learn the
-    // size the collect is about to reveal anyway. If the limit comes
-    // back full, the edge set is big: fall through to the iterative
-    // path (which re-scans, exactly as the old count-gated path did).
-    // clamp BEFORE adding one: threshold = Long.MaxValue must mean
-    // "always driver-finish", not wrap to a gate that never fires
-    val gateLimit = math.min(driverFinishThreshold, (Int.MaxValue - 2).toLong).toInt + 1
-    val gathered = e.as[(Long, Long)].limit(gateLimit).collect()
-    // driver-finish only when the limited collect came back NOT full: a
-    // full collect means more edges exist beyond the limit (including
-    // the clamped case driverFinishThreshold + 1 > Int.MaxValue - 1,
-    // where length <= threshold would hold on a TRUNCATED edge set and
-    // label components from incomplete data)
-    if (gathered.length < gateLimit)
-      return minRootLabels(gathered.iterator).toSeq.toDF("node", "component")
+    // 0 runs no gate action: the solve skeleton has already gated the
+    // same pairs and found them too big
+    val small = if (driverFinishThreshold > 0) fitting(e.as[(Long, Long)], driverFinishThreshold)
+      else None
+    if (small.isDefined)
+      return minRootLabels(small.get.iterator).toSeq.toDF("node", "component")
 
     e = ckpt(e)
 
@@ -154,79 +145,100 @@ object ConnectedComponents {
     ckpt.finish(members.union(roots).distinct())
   }
 
-  /** Convenience: cluster candidate pairs (dset0,dset1,rec0,rec1) into
+  /** Cluster candidate pairs (sim, dset0, dset1, rec0, rec1) into
     * (dsetId, recId, clusterId). Node ids are packed via a mixing of
     * (dsetId, recId) ([[Encoding.nodeIdCol]]); clusterId is the minimum
     * node id of the cluster, so it is always one member's node id.
+    * Self-loop-only records are dropped on both paths of [[solvePairs]]:
+    * the driver labels only non-self-loop endpoints, and the
+    * distributed path joins the vertex table with [[run]]'s labels.
+    * Small inputs come back as a driver-built local relation, bigger
+    * ones cached and materialized ([[solvePairs]]).
     *
-    * Small graphs (at most 100 000 pairs, [[run]]'s default
-    * driver-finish threshold) are labelled on the driver: the gate collects the pair
-    * endpoints themselves in ONE limited action, labels them with a
-    * union-find, and returns the table built on the driver — no vertex
-    * `distinct` and no join of driver labels back through Spark. The
-    * result is row-identical to [[run]]'s distributed path joined with
-    * the vertex table: self-loop-only nodes are dropped there by the
-    * inner join and here by labelling only non-self-loop endpoints.
-    *
-    * Eager-and-released like the near-dup ops: the RESULT comes back
-    * cached and materialized, and the internal input cache (taken only
-    * on the distributed path, when the caller passed an unpersisted
-    * frame) is released before returning — repeated calls in one
-    * session must not accumulate pinned copies of the whole upstream
-    * scoring pipeline. Callers `unpersist()` the returned frame when
-    * done. */
-  def clusterPairs(pairs0: DataFrame, maxIterations: Int = 50,
+    * @param driverFinishThreshold inputs of at most this many pairs are
+    *                     labelled on the driver (0 forces the component
+    *                     path, for specs). */
+  def clusterPairs(pairs: DataFrame,
+      driverFinishThreshold: Long = DriverFinishPairs,
       checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs0.sparkSession
-    import spark.implicits._
-    val gateLimit = DriverFinishPairs.toInt + 1
-    val ends = pairs0
-      .select(col("dset0").cast("int"), col("rec0").cast("long"),
-        col("dset1").cast("int"), col("rec1").cast("long"))
-      .as[(Int, Long, Int, Long)]
-      .limit(gateLimit).collect()
-    if (ends.length < gateLimit) {
-      import Encoding.{nodeId => node}
-      val labels = minRootLabels(ends.iterator.map { case (d0, r0, d1, r1) =>
-        (node(d0, r0), node(d1, r1)) })
-      // every distinct endpoint whose node lies on a non-self-loop edge
-      val out = ends.iterator
-        .flatMap { case (d0, r0, d1, r1) => Iterator((d0, r0), (d1, r1)) }
-        .distinct
-        .flatMap { case (d, r) => labels.get(node(d, r)).map((d, r, _)) }
-        .toSeq.toDF("dsetId", "recId", "clusterId").cache()
-      // materialize with one job: count() would add an aggregate exchange
-      out.foreach((_: org.apache.spark.sql.Row) => ())
-      return out
-    }
-    // cache: the pair stream is scanned by BOTH vertex projections, the
-    // edge projection, and CC's initial distinct+count — without this a
-    // lazily-derived input (the whole scoring pipeline) recomputes 3-4×.
-    // Respect a caller's existing persist (Linkage.run caches the same
-    // frame) instead of triggering the double-cache warning.
-    // cache() returns `this`, so track ownership with a flag — a
-    // reference comparison of pairs vs pairs0 would never detect it
-    val ownCache = pairs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val pairs = if (ownCache) pairs0.cache() else pairs0
-    val nodeId0 = Encoding.nodeIdCol(col("dset0"), col("rec0"))
-    val nodeId1 = Encoding.nodeIdCol(col("dset1"), col("rec1"))
-    val vertices = pairs.select(col("dset0").as("dsetId"), col("rec0").as("recId"))
-      .union(pairs.select(col("dset1"), col("rec1")))
-      .distinct()
-      .withColumn("node", Encoding.nodeIdCol($"dsetId", $"recId"))
-    val edges = pairs.select(nodeId0.as("src"), nodeId1.as("dst"))
-    try {
-      val comps = run(edges, maxIterations, checkpointDir = checkpointDir)
-      val out = vertices.join(comps, "node")
-        .select($"dsetId", $"recId", $"component".as("clusterId"))
-        .cache()
-      out.count()
-      out
-    } finally { if (ownCache) pairs.unpersist(blocking = true) }
+    import pairs.sparkSession.implicits._
+    import Encoding.{nodeId => node}
+    solvePairs(pairs, driverFinishThreshold, checkpointDir)(
+      cands => {
+        val labels = minRootLabels(cands.iterator.map(c =>
+          (node(c.dset0, c.rec0), node(c.dset1, c.rec1))))
+        cands.iterator.flatMap(c => Iterator((c.dset0, c.rec0), (c.dset1, c.rec1)))
+          .distinct
+          .flatMap { case (d, r) => labels.get(node(d, r)).map((d, r, _)) }
+      },
+      (p, comps) => p.select($"dset0".as("dsetId"), $"rec0".as("recId"))
+        .union(p.select($"dset1", $"rec1"))
+        .distinct()
+        .withColumn("node", Encoding.nodeIdCol($"dsetId", $"recId"))
+        .join(comps, "node")
+        .select($"dsetId", $"recId", $"component".as("clusterId")))
   }
 
-  /** [[clusterPairs]]' pair-count gate: [[run]]'s default edge threshold,
-    * and the default driver finish of [[DistributedProbGreedy]]. */
+  /** The one solve skeleton of [[clusterPairs]] and
+    * [[DistributedProbGreedy]]. ONE limited collect of the five
+    * candidate columns decides the path:
+    *  - at most `driverFinishThreshold` pairs: `sequential` solves them
+    *    on the driver and its rows come back as a local relation — no
+    *    cache, no job;
+    *  - more: the pairs are cached unless the caller persisted them,
+    *    split by [[run]] (its own gate off: this one already ran), and
+    *    `perComponents(pairs, (node, component))` solves the split. That
+    *    result comes back cached and materialized (callers `unpersist()`
+    *    it when done), and the skeleton's own input cache is released
+    *    first, so repeated calls in one session pin no copies of the
+    *    upstream scoring pipeline. */
+  private[solve] def solvePairs(pairs: DataFrame, driverFinishThreshold: Long,
+      checkpointDir: Option[String])(
+      sequential: Seq[Candidate] => Iterator[(Int, Long, Long)],
+      perComponents: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val p0 = pairs.select(col("sim").cast("double").as("sim"),
+      col("dset0").cast("int").as("dset0"), col("dset1").cast("int").as("dset1"),
+      col("rec0").cast("long").as("rec0"), col("rec1").cast("long").as("rec1"))
+    val small = fitting(p0.as[Candidate], driverFinishThreshold)
+    if (small.isDefined)
+      return sequential(small.get.toSeq).toSeq.toDF("dsetId", "recId", "clusterId")
+    // the pairs are scanned by the edge projection and by perComponents:
+    // without a cache a lazily-derived input (the whole scoring
+    // pipeline) recomputes. A caller's persist (Linkage.run) already
+    // serves both, and a second copy buys nothing.
+    val ownCache = pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val p = if (ownCache) p0.cache() else p0
+    try {
+      val comps = run(p.select(Encoding.nodeIdCol($"dset0", $"rec0").as("src"),
+        Encoding.nodeIdCol($"dset1", $"rec1").as("dst")),
+        driverFinishThreshold = 0L, checkpointDir = checkpointDir)
+      val out = perComponents(p, comps).toDF("dsetId", "recId", "clusterId").cache()
+      out.count()
+      out
+    } finally { if (ownCache) p.unpersist(blocking = true) }
+  }
+
+  /** The driver-finish gate of [[run]] and [[solvePairs]]: ONE action,
+    * a collect of up to `threshold + 1` rows, instead of
+    * count()-then-collect() — the count would execute the caller's full
+    * (uncached) upstream pipeline a second time just to learn the size
+    * the collect is about to reveal anyway. Some(rows) when they all
+    * fit; None when the limit came back full, i.e. more rows exist
+    * beyond it (including the clamped case threshold + 1 >
+    * Int.MaxValue - 1, where rows <= threshold would hold on a
+    * TRUNCATED input and solve it from incomplete data). The clamp
+    * comes BEFORE adding one: threshold = Long.MaxValue must mean
+    * "always driver-finish", not wrap to a gate that never fires. */
+  private def fitting[T](rows: Dataset[T], threshold: Long): Option[Array[T]] = {
+    val limit = math.min(threshold, (Int.MaxValue - 2).toLong).toInt + 1
+    val got = rows.limit(limit).collect()
+    if (got.length < limit) Some(got) else None
+  }
+
+  /** The default driver-finish threshold of every solver, in pairs (or,
+    * for [[run]], distinct edges). */
   private[solve] val DriverFinishPairs = 100000L
 
   /** Sequential min-root union-find over a small edge list: maps every

@@ -1,7 +1,6 @@
 package graft.solve
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Distributed EXACT multiparty probabilistic greedy solving
   * (merge_threshold ≤ 1, deduplicated or not) — the one solver
@@ -38,13 +37,17 @@ import org.apache.spark.sql.functions._
   * sequentially in one task — which is precisely the reference's
   * behavior for the whole input, i.e. the worst case is parity, the
   * common case is cluster-parallel. An input small enough for the
-  * driver skips all of that and is solved there in one pass.
+  * driver skips all of that and is solved there in one pass — the
+  * solve skeleton [[ConnectedComponents.solvePairs]] that the
+  * `components` solver runs too.
   */
 object DistributedProbGreedy {
 
   /** Solve and return the nontrivial groups as a cluster table
     * (dsetId, recId, clusterId); clusterId = min member node id
-    * ([[ConnectedComponents.Encoding]]), deterministic.
+    * ([[ConnectedComponents.Encoding]]), deterministic. Small inputs
+    * come back as a driver-built local relation, bigger ones cached and
+    * materialized ([[ConnectedComponents.solvePairs]]).
     *
     * @param pairs candidate pairs (sim, dset0, dset1, rec0, rec1) —
     *              the same shape [[graft.cand.Candidates]] emits.
@@ -83,11 +86,10 @@ object DistributedProbGreedy {
     solve(pairs, 1.0, deduplicated = false, minLabel = false, checkpointDir,
       driverFinishThreshold)
 
-  /** Small inputs (at most `driverFinishThreshold` pairs) are solved on
-    * the driver: ONE limited collect of the five candidate columns, the
-    * sequential solve, and a table built on the driver (a local
-    * relation — no cache, no materializing job). Bigger inputs take the
-    * per-component path and come back cached and materialized. */
+  /** [[ConnectedComponents.solvePairs]] with the sequential solve
+    * ([[Greedy.probabilisticGreedySolve]]) on the driver for small
+    * inputs, and per component, after one shuffle keying candidates by
+    * component, otherwise. */
   private def solve(
       pairs: DataFrame,
       mergeThreshold: Double,
@@ -95,49 +97,25 @@ object DistributedProbGreedy {
       minLabel: Boolean,
       checkpointDir: Option[String],
       driverFinishThreshold: Long): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val p0 = pairs.select(col("sim").cast("double").as("sim"),
-      col("dset0").cast("int").as("dset0"), col("dset1").cast("int").as("dset1"),
-      col("rec0").cast("long").as("rec0"), col("rec1").cast("long").as("rec1"))
-    // clamp BEFORE adding one: threshold = Long.MaxValue must mean
-    // "always driver-finish", not wrap to a gate that never fires
-    val gateLimit = math.min(driverFinishThreshold, (Int.MaxValue - 2).toLong).toInt + 1
-    val gathered = p0.as[(Double, Int, Int, Long, Long)].limit(gateLimit).collect()
-    if (gathered.length < gateLimit) {
-      val cands = gathered.toSeq.map(t => Candidate(t._1, t._2, t._3, t._4, t._5))
-      return groupRows(Greedy.probabilisticGreedySolve(cands, mergeThreshold, deduplicated),
-        minLabel).toSeq.toDF("dsetId", "recId", "clusterId")
-    }
-    // respect a caller's existing persist (Linkage.candidatePairs
-    // returns a cached frame on the no-checkpoint path): the projection
-    // reads the parent cache, so a second copy buys nothing
-    val ownCache = pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val p = if (ownCache) p0.cache() else p0
-    val n0 = ConnectedComponents.Encoding.nodeIdCol(col("dset0"), col("rec0"))
-    val n1 = ConnectedComponents.Encoding.nodeIdCol(col("dset1"), col("rec1"))
-    // CC drops self-loop candidates (i0 == i1) — the sequential solver
-    // skips them too (:69 `if i0 != i1`), so losing their rows to the
-    // inner join below is semantics-preserving: a node with ONLY
-    // self-edges forms no group.
-    val comps = ConnectedComponents.run(p.select(n0.as("src"), n1.as("dst")),
-      driverFinishThreshold = driverFinishThreshold, checkpointDir = checkpointDir)
-    val out = p.withColumn("node0", n0)
-      .join(comps.withColumnRenamed("node", "node0")
-        .withColumnRenamed("component", "comp"), "node0")
-      .select($"comp", $"sim", $"dset0", $"dset1", $"rec0", $"rec1")
-      .as[(Long, Double, Int, Int, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val cands = it.map(t => Candidate(t._2, t._3, t._4, t._5, t._6)).toSeq
-        groupRows(Greedy.probabilisticGreedySolve(cands, mergeThreshold, deduplicated),
-          minLabel)
-      }
-      .toDF("dsetId", "recId", "clusterId")
-      .cache()
-    out.count()
-    if (ownCache) p.unpersist()
-    out
+    import pairs.sparkSession.implicits._
+    // a function value, not a local def: the per-component lambda ships
+    // it to executors, and a lifted local def would capture this object
+    val solveGroups = (cands: Seq[Candidate]) =>
+      groupRows(Greedy.probabilisticGreedySolve(cands, mergeThreshold, deduplicated), minLabel)
+    ConnectedComponents.solvePairs(pairs, driverFinishThreshold, checkpointDir)(solveGroups,
+      // CC drops self-loop candidates (i0 == i1) — the sequential solver
+      // skips them too (:69 `if i0 != i1`), so losing their rows to the
+      // inner join is semantics-preserving: a node with ONLY self-edges
+      // forms no group.
+      (p, comps) => p.withColumn("node0", ConnectedComponents.Encoding.nodeIdCol($"dset0", $"rec0"))
+        .join(comps.withColumnRenamed("node", "node0")
+          .withColumnRenamed("component", "comp"), "node0")
+        .select($"comp", $"sim", $"dset0", $"dset1", $"rec0", $"rec1")
+        .as[(Long, Double, Int, Int, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroups((_, it) =>
+          solveGroups(it.map(t => Candidate(t._2, t._3, t._4, t._5, t._6)).toSeq))
+        .toDF())
   }
 
   /** Groups → (dsetId, recId, clusterId) rows, labelled with the min

@@ -27,16 +27,6 @@ object StreamOps {
       .groupBy(window(col(tsCol), windowLen), col(keyCol))
       .agg(count(lit(1)).as("n"))
 
-  /** Streaming CLK encode: the batch encoder applied incrementally —
-    * pages arriving on a stream get the same deterministic
-    * (recId, clk, pop, bandKeys) as the batch path, so incremental
-    * blocks can be unioned with historical ones. */
-  def encodePages(
-      pages: DataFrame,
-      params: graft.LinkageParams,
-      dsetIdExpr: org.apache.spark.sql.Column): DataFrame =
-    graft.Linkage.encode(pages, params, dsetIdExpr).toDF()
-
   /** Incremental linkage: match STREAMING pages against a packed
     * reference set (the production shape — a continuously-ingested
     * crawl matched against yesterday's entity table). Each micro-batch

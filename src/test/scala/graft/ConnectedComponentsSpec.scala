@@ -152,7 +152,17 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (0.7, 0, 1, 30L, 40L))
       .toDF("sim", "dset0", "dset1", "rec0", "rec1")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = ConnectedComponents.clusterPairs(pairs)
+    // the driver-built table of a small input is a local relation: no cache
+    val small = ConnectedComponents.clusterPairs(pairs)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the small-input path must persist nothing")
+    assert(small.count() == 4)
+    // the component path caches its input and its result; its rounds
+    // snapshot to a directory here, because localCheckpoint rounds
+    // persist blocks that the result's lineage keeps
+    val dir = Some(java.nio.file.Files.createTempDirectory("ccrel").toString)
+    val out = ConnectedComponents.clusterPairs(pairs, driverFinishThreshold = 0L,
+      checkpointDir = dir)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.size == 1,
       s"exactly the returned frame's cache may survive the call; leaked: $leaked")
@@ -161,7 +171,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // a caller-cached input stays the CALLER's to release
     val mine = pairs.cache()
     try {
-      val out2 = ConnectedComponents.clusterPairs(mine)
+      val out2 = ConnectedComponents.clusterPairs(mine, driverFinishThreshold = 0L,
+        checkpointDir = dir)
       assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
         "clusterPairs must not unpersist a cache it does not own")
       out2.unpersist(blocking = true)
@@ -183,8 +194,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       val actions = SparkTestBase.countRootActions {
         small = ConnectedComponents.clusterPairs(pairs)
       }
-      assert(actions == 2, s"trial $trial: the small-graph path is one gate " +
-        s"collect + one materialization (saw $actions root actions)")
+      assert(actions == 1, s"trial $trial: the small-graph path is one gate " +
+        s"collect and nothing else (saw $actions root actions)")
       val nodeId0 = ConnectedComponents.Encoding.nodeIdCol($"dset0", $"rec0")
       val nodeId1 = ConnectedComponents.Encoding.nodeIdCol($"dset1", $"rec1")
       val vertices = pairs.select($"dset0".as("dsetId"), $"rec0".as("recId"))
@@ -196,10 +207,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .select($"dsetId", $"recId", $"component".as("clusterId"))
       def sortedRows(df: org.apache.spark.sql.DataFrame) =
         df.as[(Int, Long, Long)].collect().toSeq.sorted
+      val viaComponents = ConnectedComponents.clusterPairs(pairs, driverFinishThreshold = 0L)
       val got = sortedRows(small)
       assert(got == sortedRows(distributed), s"trial $trial")
+      assert(got == sortedRows(viaComponents), s"trial $trial: clusterPairs' component path")
       assert(got.nonEmpty && !got.exists(r => r._2 == 99L), s"trial $trial")
-      small.unpersist(blocking = true)
+      viaComponents.unpersist(blocking = true)
     }
   }
 

@@ -203,19 +203,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(boilerPairs.forall(_.sim == 1.0))
   }
 
-  test("candidate-pair shards: save + k-way merge == monolithic (ref serialization.py:285-338)") {
-    val params = LinkageParams(blocking = MinhashBlocking(), threshold = 0.75, k = Some(5))
-    val pairs = Linkage.candidatePairs(pagesDf, params, dsetExpr).cache()
-    val base = java.nio.file.Files.createTempDirectory("graft-shards").toString
-    // shard by parity of rec0, save separately, merge back
-    graft.io.CandidateIO.save(pairs.where(pmod(col("rec0"), lit(2)) === 0), s"$base/s0")
-    graft.io.CandidateIO.save(pairs.where(pmod(col("rec0"), lit(2)) =!= 0), s"$base/s1")
-    val merged = graft.io.CandidateIO.merge(spark, Seq(s"$base/s0", s"$base/s1"))
-    val got = collectPairs(merged)
-    val want = collectPairs(pairs)
-    assert(got == want && got.nonEmpty)
-  }
-
   test("checkpoint resume: second run reads the snapshot and matches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val params = LinkageParams(blocking = MinhashBlocking(), threshold = 0.8, k = Some(5),
@@ -240,6 +227,10 @@ class PipelineSpec extends AnyFunSuite {
     val expected = collectPairs(Linkage.candidatePairs(
       pagesDf, changed.copy(checkpointDir = None), dsetExpr))
     assert(third == expected && third != first)
+    // a snapshot without its recorded schema fails loudly on resume
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$stageDir/_SCHEMA.json"))
+    val e = intercept[IllegalStateException](Linkage.candidatePairs(poisoned, params, dsetExpr))
+    assert(e.getMessage.contains("_SCHEMA.json"))
   }
 
   test("snapshot manifests are exact: row_count and per-file rows equal a " +

@@ -22,7 +22,7 @@ object SparkTestBase {
     * (OpsSpec, ConnectedComponentsSpec, EvaluationSpec-style). */
   def countRootActions(body: => Unit): Int = {
     val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
+    listening(new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
         e match {
           case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -30,13 +30,31 @@ object SparkTestBase {
             execs.incrementAndGet(); ()
           case _ => ()
         }
-    }
+    })(body)
+    execs.get()
+  }
+
+  /** Count Spark jobs started during `body`. Unlike
+    * [[countRootActions]] this also sees jobs that run outside a SQL
+    * execution, such as a Parquet read's schema inference. */
+  def countJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    })(body)
+    jobs.get()
+  }
+
+  /** Run `body` with `listener` registered, draining the listener bus
+    * on both sides so it sees exactly the events of `body`. */
+  private def listening(listener: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
     org.apache.spark.graftlistener.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
       org.apache.spark.graftlistener.drainListenerBus(spark.sparkContext)
-      execs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

@@ -44,7 +44,7 @@ class StreamingSpec extends AnyFunSuite {
     val batchPages = spark.read.parquet(pagesDir)
     val params = LinkageParams()
     val stream = spark.readStream.schema(batchPages.schema).parquet(pagesDir)
-    val q = StreamOps.encodePages(stream, params, col("dsetId"))
+    val q = Linkage.encode(stream, params, col("dsetId")).toDF()
       .writeStream.outputMode("append").format("memory").queryName("enc_stream")
       .trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
