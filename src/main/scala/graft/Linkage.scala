@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.block.{BitBandParams, Blocking, MinhashParams}
 import graft.cand.Candidates
@@ -133,17 +133,10 @@ object Linkage {
       .select(col("key"), col("dsetId"), col("recId"), col("clk"), col("pop"))
   }
 
-  /** Explode band keys and salt skewed blocks, also reporting whether
-    * ANY block was salted — callers use it to skip the per-block top-k
-    * restoration window when every cell is already a whole block.
-    *
-    * Salting: per block key, the comparison rectangle |A|×|B| is tiled
-    * into sA×sB cells each within `pairBudget`; A-side rows pick a
-    * deterministic sA-row and replicate across the sB columns, B-side
-    * rows the mirror. Non-skewed keys pass through with salt 0.
-    * Translation of `split_to_chunks`'s bounded-task guarantee
-    * (`concurrency.py:74-86`) into key-space salting.
-    */
+  /** Explode band keys and salt skewed blocks
+    * ([[saltExplodedWithStats]]), also reporting whether ANY block was
+    * salted — callers use it to skip the per-block top-k restoration
+    * window when every cell is already a whole block. */
   def blockAndSaltWithStats(
       encoded: Dataset[EncodedRecord],
       params: LinkageParams): (Dataset[BlockedRow], Boolean) = {
@@ -156,31 +149,27 @@ object Linkage {
   /** Salt an exploded `(key, dsetId, recId, clk, pop)` table — shared
     * by band blocking ([[blockAndSaltWithStats]]) and external-key
     * blocking ([[listBlocked]]) — returning also whether any key was
-    * salted. */
+    * salted.
+    *
+    * One relational plan around the key census. The census keeps the
+    * ACTIVE keys — a band shared by ≥2 datasets; every other band is a
+    * singleton that can never produce a pair — each with its salt grid
+    * sA×sB. A hot key (|A|·|B| above `pairBudget`) has its rectangle
+    * tiled into cells of about √budget × √budget; every other key is
+    * one 1×1 cell. The rows join the grid (which also drops the
+    * inactive keys) and a relational explode assigns the salts: an
+    * A-side row picks a deterministic grid row and replicates across
+    * the sB columns, a B-side row the mirror. Translation of
+    * `split_to_chunks`'s bounded-task guarantee (`concurrency.py:74-86`)
+    * into key-space salting; nothing per key reaches the driver.
+    */
   def saltExplodedWithStats(
       exploded: DataFrame, params: LinkageParams): (Dataset[BlockedRow], Boolean) = {
     val spark = exploded.sparkSession
     import spark.implicits._
 
-    // One aggregate pass over the keys (map-side combined) feeds two
-    // pruning decisions:
-    //  - ACTIVE keys: a band shared by ≥2 datasets — every other band
-    //    is a singleton that can never produce a pair. At web scale
-    //    most documents are unique, so most bands die here; the inner
-    //    join keeps the kernel's group count proportional to candidate
-    //    pairs, not to corpus size.
-    //  - HOT keys: |A|·|B| above the pair budget → √-tiled salt grid
-    //    (small; collected + broadcast).
     val budget = params.pairBudget
-    val keyStats = exploded.groupBy($"key")
-      .agg(
-        sum(when($"dsetId" === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when($"dsetId" =!= 0, 1L).otherwise(0L)).as("n1"),
-        min($"dsetId").as("dmin"),
-        max($"dsetId").as("dmax"))
-    // ≥2 distinct datasets ⇔ min ≠ max (cheaper than countDistinct's
-    // aggregate expand; correct for multiparty too)
-    val active = keyStats.where($"dmin" =!= $"dmax").select($"key")
+    val side = math.sqrt(budget.toDouble).toLong max 1L
     // Salting assumes a bipartite cell (A replicated over B's salts and
     // vice versa); a key spanning >2 datasets would lose pairs between
     // the non-A datasets, so only pure {0,1} keys are salted — a
@@ -190,53 +179,51 @@ object Linkage {
     // must NOT pass as bipartite — dset -1 and dset 1 would both land
     // on the B side and never share a salt cell, silently losing their
     // cross pairs.
-    val hot = keyStats.where($"n0" * $"n1" > budget && $"dmin" >= 0 && $"dmax" <= 1)
-      .select($"key", $"n0", $"n1")
-      .collect()
-      .map { r =>
-        val n0 = r.getLong(1); val n1 = r.getLong(2)
-        val side = math.sqrt(budget.toDouble).toLong max 1L
-        val sA = math.max(1L, math.ceil(n0.toDouble / side).toLong).toInt
-        val sB = math.max(1L, math.ceil(n1.toDouble / side).toLong).toInt
-        r.getLong(0) -> ((sA, sB))
-      }
-      .toMap
-    val hotB = spark.sparkContext.broadcast(hot)
+    val hot = $"n0" * $"n1" > budget && $"dmin" >= 0 && $"dmax" <= 1
+    def tiles(n: Column) = when(hot, ceil(n / side)).otherwise(1).cast("int")
+    // ≥2 distinct datasets ⇔ min ≠ max (cheaper than countDistinct's
+    // aggregate expand; correct for multiparty too)
+    val grid = exploded.groupBy($"key")
+      .agg(
+        sum(when($"dsetId" === 0, 1L).otherwise(0L)).as("n0"),
+        sum(when($"dsetId" =!= 0, 1L).otherwise(0L)).as("n1"),
+        min($"dsetId").as("dmin"),
+        max($"dsetId").as("dmax"))
+      .where($"dmin" =!= $"dmax")
+      .select($"key", tiles($"n0").as("sA"), tiles($"n1").as("sB"))
+    val salted = anyRow(grid.where($"sA" * $"sB" > 1))
 
-    // left-semi against the active keys. The active set grows with the
-    // corpus (≈ bands × matched docs) — at 500k pages it already OOMs a
-    // broadcast build, so force a shuffle-hash join: scale-safe at any
-    // size, and the per-partition hash build is tiny.
-    val semi = exploded.join(active.hint("SHUFFLE_HASH"), Seq("key"), "left_semi")
-      .select($"key", $"dsetId", $"recId", $"clk", $"pop")
-    val salted =
-      if (hot.isEmpty)
-        // nothing hot: salt is constantly 0 — attach it as a pure
-        // Column projection instead of a typed flatMap. The projection
-        // preserves the semi-join's HashPartitioning(key), so the
-        // kernel's relational groupBy(key, salt) downstream needs NO
-        // second exchange (guide §2.4: two operations keyed the same
-        // way share one exchange); the typed mapPartitions here used to
-        // erase the partitioning and force a full re-shuffle of the clk
-        // payloads.
-        semi.select($"key", lit(0).as("salt"), $"dsetId", $"recId", $"clk", $"pop")
-          .as[BlockedRow]
-      else semi
-        .as[(Long, Int, Long, Array[Byte], Int)].mapPartitions { it =>
-          val hotMap = hotB.value
-          it.flatMap { case (key, dsetId, recId, clk, pop) =>
-            hotMap.get(key) match {
-              case None => Iterator.single(BlockedRow(key, 0, dsetId, recId, clk, pop))
-              case Some((sA, sB)) =>
-                val own = java.lang.Math.floorMod(Hashing.mix64(recId ^ key), (if (dsetId == 0) sA else sB).toLong).toInt
-                if (dsetId == 0)
-                  (0 until sB).iterator.map(j => BlockedRow(key, own * sB + j, dsetId, recId, clk, pop))
-                else
-                  (0 until sA).iterator.map(i => BlockedRow(key, i * sB + own, dsetId, recId, clk, pop))
-            }
-          }
-        }
-    (salted, hot.nonEmpty)
+    // The grid grows with the corpus (≈ bands × matched docs) — at 500k
+    // pages a broadcast build of the active set already OOMed — so
+    // force a shuffle-hash join: scale-safe at any size, and the
+    // per-partition hash build is tiny. The explode keeps the join's
+    // HashPartitioning(key), so unsalted the kernel's groupBy(key, salt)
+    // reads the join's exchange with no second one; salted, that would
+    // put every cell of a hot key in one task, hence the repartition by
+    // (key, salt). Unsalted, every cell is 1×1: constant tiles let the
+    // planner prune n0 and n1 from the join's census, which then
+    // shuffles what the active-key test needs and no more.
+    val cells = if (salted) grid else grid.select($"key", lit(1).as("sA"), lit(1).as("sB"))
+    val isA = $"dsetId" === 0
+    // key last, the order the band explode emits: the join's exchange
+    // then ships the explode's rows with no re-ordering projection
+    // (key-first rows compressed to 1.4% more bytes on link-pages)
+    val blocked = exploded.select($"dsetId", $"recId", $"clk", $"pop", $"key")
+      .join(cells.hint("SHUFFLE_HASH"), Seq("key"))
+      .withColumn("own", pmod(xxhash64($"recId", $"key"), when(isA, $"sA").otherwise($"sB")))
+      .withColumn("i", explode(sequence(lit(0), when(isA, $"sB").otherwise($"sA") - 1)))
+      .select($"key",
+        when(isA, $"own" * $"sB" + $"i").otherwise($"i" * $"sB" + $"own").cast("int").as("salt"),
+        $"dsetId", $"recId", $"clk", $"pop")
+    ((if (salted) blocked.repartition($"key", $"salt") else blocked).as[BlockedRow], salted)
+  }
+
+  /** Whether `df` has a row, from one boolean per partition: a
+    * `limit(1)` probe runs more jobs while the leading partitions are
+    * empty, and a global aggregate adds a stage and a job under AQE. */
+  private def anyRow(df: DataFrame): Boolean = {
+    import df.sparkSession.implicits._
+    df.mapPartitions(it => Iterator(it.hasNext)).collect().contains(true)
   }
 
   /** C1/C2/S2: per-(key,salt) cell, run the packed Dice kernel for
@@ -272,11 +259,11 @@ object Linkage {
     import spark.implicits._
     // relational groupBy on the (key, salt) COLUMNS, not a typed
     // groupByKey on a lambda: the planner can see the grouping key, so
-    // when the upstream semi-join already hash-partitioned the stream
+    // when the upstream grid join already hash-partitioned the stream
     // by `key` (the unsalted path preserves it), ClusteredDistribution
     // (key, salt) is satisfied by HashPartitioning(key) and the extra
     // exchange of the clk payloads is elided — the kernel reads the
-    // semi-join's shuffle output directly (guide §2.4).
+    // grid join's shuffle output directly.
     blocked.toDF()
       .groupBy(col("key"), col("salt")).as[(Long, Int), BlockedRow]
       .flatMapGroups { (keySalt, rows) =>
@@ -351,8 +338,9 @@ object Linkage {
     import spark.implicits._
     graft.io.Snapshots.resumeOrCompute(spark, params.checkpointDir, "candidates",
         candidatesKey(params, dsetIdExpr)) {
-      // The blocking stage scans the exploded records three times
-      // (hot-key census, active-key build side, salted kernel feed).
+      // The blocking stage scans the exploded records three times (the
+      // key census for the "any key salted?" action, the same census as
+      // the salt grid's join build side, and the kernel feed).
       // With a checkpoint dir the encode stage is snapshotted so every
       // pass reads Parquet instead of re-encoding; without one
       // (tests/small runs) the re-encode is accepted — measured cheaper
@@ -391,8 +379,9 @@ object Linkage {
         * materializes exactly once). */
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     // NOTE on the triple scan: the blocking stage reads the exploded
-    // stream three times (hot-key census, active-key build side, salted
-    // kernel feed). Measured at bench scale the re-encode is noise
+    // stream three times (the census behind the "any key salted?"
+    // action, the same census as the grid join's build side, the kernel
+    // feed). Measured at bench scale the re-encode is noise
     // (~0.1 s warm) and an internal cache + eager materialization COST
     // more than it saved on single-pass consumers (+1.1 s on
     // linkage_hist), so the frame stays lazy; at real scale the

@@ -66,7 +66,7 @@ object SparkEntry {
     * linkage pipeline's input is synthesized per BASELINE.json, not the
     * TPC-H-ish harness tables). Materialized once per process into a
     * tmp Parquet ([[materializedOnce]]): the blocking stage alone scans
-    * its input three times (census, active build side, kernel feed) and
+    * its input three times (census, salt grid build side, kernel feed) and
     * seven queries start from this corpus, so uncached each scan re-ran
     * the synthesizer inside the timed region. Synthesis is
     * deterministic (fixed seed) — the rows, and every downstream

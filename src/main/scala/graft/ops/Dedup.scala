@@ -89,9 +89,8 @@ object Dedup {
     * exhaustive. Within one bucket every pair is emitted exactly once
     * (anchor-anchor pairs only from the smaller anchor's row).
     *
-    * The star census is collected to the driver like the linkage
-    * path's hot keys (`Linkage.saltExplodedWithStats`): star buckets
-    * are few by construction — each carries > √(2·pairBudget) rows.
+    * The star bucket ids are collected to the driver: star buckets are
+    * few by construction — each carries > √(2·pairBudget) rows.
     *
     * Pairs are NOT deduplicated across buckets — callers `.distinct()`.
     */
@@ -292,36 +291,42 @@ object Dedup {
   /** The one verify join of the near-dup operators: `(id0, id1)` pairs
     * ⋈ an `(id, payload)` frame on both ends → `(id0, id1, p0, p1)`.
     *
-    * The pair side (pairs ⋈ `p0`) is cached through `cache` and counted
-    * once, so it carries its real size and the `p1` attach is planned
-    * from it: when the pair side or the (cached, already materialized)
-    * payload side is within `spark.sql.autoBroadcastJoinThreshold`, the
-    * planner broadcasts one and streams the other with no exchange;
-    * when neither is (the 50k-doc scale corpus, or a threshold of -1)
-    * SHUFFLE_HASH — unhinted it planned as sort-merge, sorting ARRAY
-    * payloads on both sides. The payload-side test matters when the
-    * pairs outnumber the payloads: `embed_neardup` at sf0.1 pairs 2 000
-    * vectors into ~500k candidates, and a forced SHUFFLE_HASH there
-    * shuffled 9.7 MB where broadcasting the vectors shuffles none.
+    * When the (cached, already materialized) payload side is within
+    * `spark.sql.autoBroadcastJoinThreshold` it is broadcast to both
+    * attaches and the pairs stream with no exchange, no cache and no
+    * extra action — `embed_neardup` at sf0.1 pairs 2 000 vectors into
+    * ~500k candidates, and caching that pair side (one 64-float vector
+    * per pair) to count it doubled the operator's time for nothing.
     *
-    * Where the bytes go (dedup-pages, 12k docs, seed 1, [[minhashLsh]]):
-    * with both attaches planned off estimates the run shuffled 26.5 MB,
-    * 16.07 MB of it in the `p1` attach — AQE exchanged all 11 573 gram
-    * arrays (10.57 MB) and the pair side (5.50 MB) before broadcasting
-    * that side. Counted first, the pair side (5.5 MB; the grams are
-    * 14.4 MB) broadcasts and the run shuffles 10.4 MB. The `p0` attach
-    * is still planned from estimates: at 50k docs AQE exchanges every
-    * payload before it broadcasts the pairs. */
+    * Otherwise the pair side (pairs ⋈ `p0`) is cached through `cache`
+    * and counted once, so it carries its real size and the `p1` attach
+    * is planned from it: within the threshold the pair side is
+    * broadcast and the payloads stream with no exchange; over it (the
+    * 50k-doc scale corpus, or a threshold of -1) SHUFFLE_HASH — unhinted
+    * it planned as sort-merge, sorting ARRAY payloads on both sides.
+    *
+    * Where the bytes go (dedup-pages, 12k docs, seed 1, [[minhashLsh]]:
+    * the gram side's plan estimate is 10.6–10.8 MB, over the 10 MB
+    * default): with both attaches planned off estimates the run
+    * shuffled 26.5 MB, 16.07 MB of it in the `p1` attach — AQE
+    * exchanged all 11 573 gram arrays (10.57 MB) and the pair side
+    * (5.50 MB) before broadcasting that side. Counted first, the pair
+    * side (5.5 MB; the grams are 14.4 MB) broadcasts and the run
+    * shuffles 10.4 MB. The `p0` attach is still planned from
+    * estimates: at 50k docs AQE exchanges every payload before it
+    * broadcasts the pairs. */
   private def attachPayloads(cache: DataFrame => DataFrame, pairs: DataFrame,
       payload: DataFrame): DataFrame = {
     val p0 = payload.select(col("id").as("id0"), col("payload").as("p0"))
     val p1 = payload.select(col("id").as("id1"), col("payload").as("p1"))
-    val pairSide = cache(pairs.join(p0, "id0"))
-    pairSide.count()
     def broadcastable(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
       pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    pairSide.join(
-      if (broadcastable(pairSide) || broadcastable(p1)) p1 else p1.hint("SHUFFLE_HASH"), "id1")
+    if (broadcastable(p1)) pairs.join(broadcast(p0), "id0").join(broadcast(p1), "id1")
+    else {
+      val pairSide = cache(pairs.join(p0, "id0"))
+      pairSide.count()
+      pairSide.join(if (broadcastable(pairSide)) p1 else p1.hint("SHUFFLE_HASH"), "id1")
+    }
   }
 
   /** The near-dup cluster pipeline of [[minhashLsh]] and [[simhash]]:
@@ -334,9 +339,10 @@ object Dedup {
     * The returned frame is CACHED and already materialized (eager, so
     * the internal caches — rep collapse, signatures, bucket table, pair
     * side — are unpersisted before returning, also when an action
-    * fails); callers `unpersist()` it when done. Four root actions:
-    * the star census, the pair-side count, CC's gate and the result's
-    * materialize. */
+    * fails); callers `unpersist()` it when done. Three root actions —
+    * the star census, CC's gate and the result's materialize — plus
+    * [[attachPayloads]]' pair-side count when the payload side is over
+    * the broadcast threshold. */
   private def nearDupClusters[P: TypeTag](
       docs: DataFrame,
       idCol: String,
@@ -531,8 +537,9 @@ object Dedup {
     * Same eager-and-cached return contract, verify-join rule
     * ([[attachPayloads]]) and `starFanout` semantics as [[minhashLsh]]
     * (a template cluster of near-identical embeddings lands in one
-    * hyperplane bucket). Three root actions: the star census, the
-    * pair-side count and the result's materialize. */
+    * hyperplane bucket). Two root actions, the star census and the
+    * result's materialize, plus [[attachPayloads]]' pair-side count
+    * when the vectors are over the broadcast threshold. */
   def embeddingNearDup(
       embeddings: DataFrame,
       idCol: String,

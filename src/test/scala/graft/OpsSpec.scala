@@ -610,19 +610,19 @@ class OpsSpec extends AnyFunSuite {
     SparkTestBase.countRootActions(body)
 
   test("near-dup operators run in their pinned root actions " +
-      "(minhashLsh 4, simhash 4, embeddingNearDup 3)") {
-    // minhashLsh/simhash: the bucketPairs census, the pair-side count,
-    // CC's gate and the eager materialize; embeddingNearDup has no CC.
-    // CC's gate is one limit-collect: a separate count + collect would
-    // execute the whole verify pipeline twice on the driver-finish
-    // path. The pair-side count is there on purpose: it gives the
-    // second payload attach its real size, so a small pair side is
-    // broadcast instead of every payload being shuffled. Pinned so
+      "(minhashLsh 3, simhash 3, embeddingNearDup 2)") {
+    // minhashLsh/simhash: the bucketPairs census, CC's gate and the
+    // eager materialize; embeddingNearDup has no CC. CC's gate is one
+    // limit-collect: a separate count + collect would execute the whole
+    // verify pipeline twice on the driver-finish path. Every payload
+    // side here is within the broadcast threshold, so the payloads
+    // broadcast to both attaches and the pair side is never counted
+    // (the verify-plan spec pins the counted regimes). Pinned so
     // neither regresses.
     val ops = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
-      ("minhashLsh", 4, () => Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35)),
-      ("simhash", 4, () => Dedup.simhash(docs, "id", "text")),
-      ("embeddingNearDup", 3, () => Dedup.embeddingNearDup(embeddings, "vec_id", "embedding")))
+      ("minhashLsh", 3, () => Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35)),
+      ("simhash", 3, () => Dedup.simhash(docs, "id", "text")),
+      ("embeddingNearDup", 2, () => Dedup.embeddingNearDup(embeddings, "vec_id", "embedding")))
     for ((name, want, op) <- ops) {
       var out: org.apache.spark.sql.DataFrame = null
       val n = countRootActions { out = op() }
@@ -631,42 +631,76 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("minhashLsh and simhash verify plan: the pair side broadcasts under the threshold, " +
-      "shuffle-hash at -1; same clusters") {
+  test("near-dup verify plan in three regimes: the payload side broadcasts to both attaches; " +
+      "only the counted pair side fits; neither fits (shuffle-hash); same clusters") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-    object Plans extends AdaptiveSparkPlanHelper
-    val ops = Seq[(String, Dedup.Tap => org.apache.spark.sql.DataFrame)](
-      "minhashLsh" -> (tap => Dedup.minhashLsh(docs, "id", "text", jaccardThreshold = 0.35, tap = tap)),
-      "simhash" -> (tap => Dedup.simhash(docs, "id", "text", tap = tap)))
-    for ((name, op) <- ops) {
-      // the verified frame's plan, read inside the tap: its pair side
-      // and signatures are still cached there
-      def run(): (SparkPlan, Seq[(Long, Long, Long)]) = {
-        var plan: SparkPlan = null
-        val out = op((stage, df) => { if (stage == "verified") plan = df.queryExecution.executedPlan; df })
-        val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-        out.unpersist()
-        (plan, rows)
+    import SparkTestBase.Plans
+    // 300 random 150-word texts plus 5 near-copies: the gram side
+    // (~300 arrays of ~150 grams) is far over 64 KB, the verified pair
+    // side (the copies, each with one gram array) far under it
+    val rnd = new scala.util.Random(5)
+    val texts = Seq.fill(300)(Seq.fill(150)(s"w${rnd.nextInt(5000)}").mkString(" "))
+    val wide = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
+      texts.take(5).zipWithIndex.map { case (t, i) => (1000L + i, t + " extra") }).toDF("id", "text")
+    val wideClusters = Dedup.minhashLsh(wide, "id", "text", jaccardThreshold = 0.8)
+    assert(wideClusters.where($"id" =!= $"clusterId").count() == 5, "the 5 near-copies must cluster")
+    wideClusters.unpersist()
+    val ops = Seq[(String, Seq[String], Dedup.Tap => org.apache.spark.sql.DataFrame)](
+      ("minhashLsh", Seq("10485760b", "65536b", "-1"),
+        tap => Dedup.minhashLsh(wide, "id", "text", jaccardThreshold = 0.8, tap = tap)),
+      ("simhash", Seq("10485760b", "-1"), tap => Dedup.simhash(docs, "id", "text", tap = tap)))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    // the pair generation (bucket lists, distinct) shuffles ids only
+    def payloadExchanges(plan: SparkPlan) = Plans.collect(plan) {
+      case e: ShuffleExchangeExec if e.output.exists(a => Set("p0", "p1", "payload")(a.name)) => e
+    }
+    def buildsOn(plan: SparkPlan, col: String) = Plans.collect(plan) { case j: BroadcastHashJoinExec => j }
+      .exists(j => (if (j.buildSide == BuildLeft) j.left else j.right).output.map(_.name).contains(col))
+    for ((name, thresholds, op) <- ops) {
+      // the verified frame's plans, read inside the tap: its pair side
+      // and payloads are still cached there
+      def run(threshold: String): (SparkPlan, Boolean, Int, Seq[(Long, Long, Long)]) = {
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, threshold)
+        try {
+          var plan: SparkPlan = null
+          var pairSideCached = false
+          var out: org.apache.spark.sql.DataFrame = null
+          val actions = countRootActions {
+            out = op((stage, df) => {
+              if (stage == "verified") {
+                plan = df.queryExecution.executedPlan
+                pairSideCached = df.queryExecution.optimizedPlan
+                  .collect { case r: InMemoryRelation => r.output.map(_.name) }.exists(_.contains("p0"))
+              }
+              df
+            })
+          }
+          val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+          out.unpersist()
+          (plan, pairSideCached, actions, rows)
+        } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       }
-      val (small, clusters) = run()
-      assert(Plans.collect(small) { case e: ShuffleExchangeExec => e }.isEmpty,
-        s"$name: a pair side under the threshold must verify without an exchange:\n$small")
-      val bhj = Plans.collect(small) { case j: BroadcastHashJoinExec => j }
-      assert(bhj.exists(j => (if (j.buildSide == BuildLeft) j.left else j.right)
-        .output.map(_.name).contains("p0")),
-        s"$name: the pair side (id0, id1, p0) must be the build side:\n$small")
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "-1")
-      val (large, clustersLarge) =
-        try run() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      assert(Plans.collect(large) { case j: ShuffledHashJoinExec => j }.nonEmpty,
-        s"$name: with broadcasting off the p1 attach must be shuffle-hash:\n$large")
-      assert(clustersLarge == clusters, s"$name: the join strategy changed the cluster table")
+      val (fits, fitsCached, fitsActions, clusters) = run(thresholds.head)
+      assert(!fitsCached && fitsActions == 3,
+        s"$name: a payload side within the threshold needs no counted pair side ($fitsActions actions)")
+      assert(payloadExchanges(fits).isEmpty && buildsOn(fits, "p0") && buildsOn(fits, "p1"),
+        s"$name: the payloads must broadcast to both attaches, never exchanged:\n$fits")
+      for (t <- thresholds.tail) {
+        val (plan, cached, actions, got) = run(t)
+        assert(cached && actions == 4, s"$name at $t: the pair side must be cached and counted ($actions actions)")
+        if (t == "-1")
+          assert(Plans.collect(plan) { case j: ShuffledHashJoinExec => j }.nonEmpty,
+            s"$name: with broadcasting off the p1 attach must be shuffle-hash:\n$plan")
+        else
+          assert(payloadExchanges(plan).isEmpty && buildsOn(plan, "p0"),
+            s"$name at $t: the counted pair side (id0, id1, p0) must broadcast, no payload exchanged:\n$plan")
+        assert(got == clusters, s"$name at $t: the join strategy changed the cluster table")
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.core.BitVector
 import graft.encode.ClkEncoder
@@ -26,6 +27,35 @@ class PipelineSpec extends AnyFunSuite {
     df.select("sim", "dset0", "dset1", "rec0", "rec1").collect()
       .map(r => Candidate(r.getDouble(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
       .toSeq.sorted(Candidate.globalOrdering)
+
+  private def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** A record with `words` as its CLK. */
+  private def record(dsetId: Int, recId: Long, words: Array[Long], keys: Array[Long]) =
+    EncodedRecord(dsetId, recId, "", BitVector.toBytes(words), BitVector.popcount(words), keys)
+
+  /** A sparse random bit flip of `proto`: variants of one prototype
+    * score ≈ 0.8 Dice, unrelated 128-bit CLKs ≈ 0.5. */
+  private def variant(rnd: scala.util.Random, proto: Array[Long]): Array[Long] =
+    proto.map(_ ^ (rnd.nextLong() & rnd.nextLong() & rnd.nextLong()))
+
+  /** `DiceKernel.naiveDice` on every dataset pair d0 < d1 of `recs`,
+    * then `Candidates.finalize` — the pipeline's semantics for one
+    * block holding every record. */
+  private def naiveFinalized(recs: Seq[EncodedRecord], params: LinkageParams): Seq[Candidate] = {
+    val sides = recs.groupBy(_.dsetId).toSeq.sortBy(_._1)
+      .map { case (d, rs) => (d, rs.map(r => (r.recId, BitVector.fromBytes(r.clk)))) }
+    val raw = for {
+      i <- sides.indices; j <- i + 1 until sides.size
+      c <- DiceKernel.naiveDice(sides(i)._2, sides(j)._2, params.threshold, params.k,
+        sides(i)._1, sides(j)._1)
+    } yield c
+    collectPairs(graft.cand.Candidates.finalize(raw.toDF(), params.k))
+  }
 
   /** Driver-side oracle: same encoding, all-pairs naive Dice, same
     * dedup/top-k semantics via the reference-shaped naive path. */
@@ -89,14 +119,11 @@ class PipelineSpec extends AnyFunSuite {
 
   test("partitioning invariance: identical pairs at different parallelism (ref test_e2e.py:220-273)") {
     val params = LinkageParams(blocking = MinhashBlocking(), threshold = 0.75, k = Some(5))
-    val p1 = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "3")
-      val a = collectPairs(Linkage.candidatePairs(pagesDf.repartition(2), params, dsetExpr))
-      spark.conf.set("spark.sql.shuffle.partitions", "17")
-      val b = collectPairs(Linkage.candidatePairs(pagesDf.repartition(13), params, dsetExpr))
-      assert(a.nonEmpty && a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", p1)
+    val a = withShufflePartitions(3)(
+      collectPairs(Linkage.candidatePairs(pagesDf.repartition(2), params, dsetExpr)))
+    val b = withShufflePartitions(17)(
+      collectPairs(Linkage.candidatePairs(pagesDf.repartition(13), params, dsetExpr)))
+    assert(a.nonEmpty && a == b)
   }
 
   test("salting leaves results unchanged (split_to_chunks invariant)") {
@@ -260,5 +287,122 @@ class PipelineSpec extends AnyFunSuite {
       assert(back.schema == rescan.schema, name)
       assert(back.count() == rescan.count(), name)
     }
+  }
+
+  test("property: candidatePairsFromEncoded is invariant to pairBudget (forced salting) and " +
+      "shuffle partitions, and under NoBlocking equals naiveDice + Candidates.finalize " +
+      "(2 datasets, 3 datasets, signed {-1,0,1} ids; k None or 1..5)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // a budget of 1..3 salts every bipartite key with ≥ 2 rows a side
+    // (each dataset gets ≥ 2 of the ≥ 6 records); band keys come from
+    // 3 prototype keys and 3 noise keys, so blocks overlap. Each case
+    // runs the default budget and the tiny one at two drawn partition
+    // counts: two pipeline runs a case, three cases per dataset coding,
+    // keep the property under 20 s.
+    val cases = for {
+      n <- Gen.choose(6, 24)
+      noBlocking <- Gen.oneOf(true, false)
+      k <- Gen.oneOf(None +: (1 to 5).map(Some(_)))
+      budget <- Gen.choose(1L, 3L)
+      parts <- Gen.listOfN(2, Gen.oneOf(1, 4, 7))
+      seed <- Gen.choose(Long.MinValue, Long.MaxValue)
+    } yield (n, noBlocking, k, budget, parts, seed)
+    def prop(dsets: Seq[Int]) = Prop.forAllNoShrink(cases) {
+        case (n, noBlocking, k, budget, parts, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val protos = Seq.fill(3)(Array.fill(2)(rnd.nextLong()))
+      val recs = (0 until n).map { i =>
+        val p = rnd.nextInt(protos.size)
+        record(dsets(i % dsets.size), rnd.nextLong(), variant(rnd, protos(p)),
+          if (noBlocking) Array(0L) else Array(p.toLong, 3L + rnd.nextInt(3)))
+      }
+      val params = LinkageParams(threshold = 0.6, k = k)
+      def run(p: LinkageParams, parts: Int) = withShufflePartitions(parts)(
+        collectPairs(Linkage.candidatePairsFromEncoded(recs.toDS(), p)))
+      val want = run(params, parts(0))
+      run(params.copy(pairBudget = budget), parts(1)) == want &&
+        (!noBlocking || want == naiveFinalized(recs, params))
+    }
+    for ((dsets, i) <- Seq(Seq(0, 1), Seq(0, 1, 2), Seq(-1, 0, 1)).zipWithIndex) {
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(3)
+        .withWorkers(1).withInitialSeed(13L + i), prop(dsets))
+      assert(result.passed, s"datasets $dsets: " + org.scalacheck.util.Pretty.pretty(result))
+    }
+  }
+
+  test("blocking stage plan: one root action; unsalted, one payload exchange into the kernel " +
+      "and no broadcast; salted, the kernel reads hashpartitioning(key, salt) over several partitions") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapGroupsExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import SparkTestBase.Plans
+    val rnd = new scala.util.Random(3)
+    // key 7 holds 20 × 20 records; keys 8..10 a third of them each
+    val enc = (0 until 40).map(i =>
+      record(i % 2, rnd.nextLong(), Array.fill(2)(rnd.nextLong()), Array(7L, 8L + i % 3))).toDS()
+    for (budget <- Seq(LinkageParams().pairBudget, 10L)) {
+      val params = LinkageParams(threshold = 0.6, pairBudget = budget)
+      var blocked: Dataset[BlockedRow] = null
+      var salted = false
+      val actions = SparkTestBase.countRootActions {
+        val (b, s) = Linkage.blockAndSaltWithStats(enc, params)
+        blocked = b; salted = s
+      }
+      assert(actions == 1, s"pairBudget=$budget: $actions root actions")
+      assert(salted == (budget == 10L))
+      val scored = Linkage.scorePairs(blocked, params)
+      scored.collect()
+      val plan = scored.queryExecution.executedPlan
+      val kernel = Plans.collect(plan) { case m: MapGroupsExec => m }
+      assert(kernel.size == 1, plan)
+      // pre-order: the first payload exchange is the kernel's input
+      val payload = Plans.collect(kernel.head) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "clk") => e
+      }
+      assert(Plans.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+      if (!salted) assert(payload.size == 1, s"unsalted needs one payload exchange:\n$plan")
+      else {
+        assert(payload.size == 2, s"salted adds one payload exchange:\n$plan")
+        val cols = payload.head.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+          case other => Seq(other.toString)
+        }
+        assert(cols == Seq("key", "salt"), s"kernel input partitioning: $cols\n$plan")
+        // AQE would merge these few tiny partitions into one task; the
+        // spread of a hot key's cells is the hash partitioning's
+        val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+        spark.conf.set(coalesce, "false")
+        val parts = try blocked.toDF().where($"key" === 7L)
+          .select(spark_partition_id()).distinct().count()
+        finally spark.conf.unset(coalesce)
+        assert(parts >= 2, s"the hot key's cells ran in $parts partition(s)")
+      }
+    }
+  }
+
+  test("200+ hot bipartite keys at a tiny pairBudget: salted == unsalted == naive scoring") {
+    // 20 groups of 4 + 4 variants of one prototype; each group's
+    // records carry the group's 12 keys: 240 keys of 4 × 4 = 16 pairs,
+    // every one hot at a budget of 4 (a 2 × 2 grid of 2 × 2 cells)
+    val rnd = new scala.util.Random(17)
+    val groups = (0 until 20).map { g =>
+      val proto = Array.fill(2)(rnd.nextLong())
+      (0 until 8).map(i =>
+        record(i % 2, rnd.nextLong(), variant(rnd, proto), Array.tabulate(12)(j => g * 12L + j)))
+    }
+    val recs = groups.flatten
+    val hot = recs.flatMap(r => r.bandKeys.map(_ -> r.dsetId)).groupBy(_._1).count { case (_, rs) =>
+      rs.count(_._2 == 0).toLong * rs.count(_._2 == 1) > 4L
+    }
+    assert(hot >= 200, s"$hot hot keys")
+    val base = LinkageParams(threshold = 0.6, k = Some(2))
+    val salted = collectPairs(Linkage.candidatePairsFromEncoded(recs.toDS(), base.copy(pairBudget = 4L)))
+    val unsalted = collectPairs(Linkage.candidatePairsFromEncoded(recs.toDS(), base))
+    // blocks never span groups, so naive scoring is per group
+    val naive = collectPairs(graft.cand.Candidates.finalize(groups.flatMap { g =>
+      def side(d: Int) = g.filter(_.dsetId == d).map(r => (r.recId, BitVector.fromBytes(r.clk)))
+      DiceKernel.naiveDice(side(0), side(1), base.threshold, base.k)
+    }.toDF(), base.k))
+    assert(naive.nonEmpty && salted == unsalted && unsalted == naive)
   }
 }

@@ -16,6 +16,10 @@ object SparkTestBase {
     s
   }
 
+  /** Plan walks that descend into AQE query stages, for the plan
+    * specs (OpsSpec, PipelineSpec). */
+  object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   /** Count root SQL executions (= actions) during `body`. AQE re-posts
     * nested executions with a rootExecutionId pointing at the parent;
     * only roots are counted. Shared by the action-count contract specs
